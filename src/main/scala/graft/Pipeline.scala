@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Observation, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.operators._
@@ -18,7 +18,8 @@ import graft.sources.{MockQboApi, PaginatedRest}
   * Unlike the reference's Mage 2-block DAG with a disk handoff between
   * loader and exporter, the whole pipeline is one lazy Spark plan per
   * action — the only barrier is the idempotence probe-before-append inside
-  * IdempotentAppend (an action boundary, SURVEY §3.3).
+  * IdempotentAppend (an action boundary, SURVEY §3.3). Past the extract, a
+  * run is the append's two actions; the window count is observed on them.
   *
   * Usage: runMain graft.Pipeline [sinkDir] [nRecords] [lo] [hi]
   */
@@ -27,18 +28,25 @@ object Pipeline {
   final case class RunReport(filtered: Long, inserted: Long)
 
   /** One pipeline run against any fetcher; returns (rows passing the
-    * window filter, rows actually inserted). */
+    * window filter, rows actually inserted). Frees the extract's cache. */
   def run(spark: SparkSession, fetcher: PaginatedRest.PageFetcher,
       sink: String, lo: String, hi: String,
       numBuckets: Int = 64): RunReport = {
     val raw = PaginatedRest.read(spark, fetcher, pageSize = 100)
-    val parsed = PaginatedRest.parsed(raw, Schemas.customer)
-      .select(col("rec.*"))
-    val windowed = WindowFilters.dateWindow(parsed,
-      col("MetaData.LastUpdatedTime"), lo, hi)
-    val env = Envelope.project(windowed, col("Id"), "customer", lo, hi)
-    val inserted = IdempotentAppend.toBucketedParquet(env, sink, "id", numBuckets)
-    RunReport(windowed.count(), inserted)
+    try {
+      val parsed = PaginatedRest.parsed(raw, Schemas.customer)
+        .select(col("rec.*"))
+      val filtered = Observation()
+      val windowed = WindowFilters.dateWindow(parsed,
+        col("MetaData.LastUpdatedTime"), lo, hi)
+        .observe(filtered, count(lit(1)).as("n"))
+      val env = Envelope.project(windowed, col("Id"), "customer", lo, hi)
+      val inserted = IdempotentAppend.toBucketedParquet(env, sink, "id", numBuckets)
+      // AQE drops the metric when the append's first stage comes out empty
+      // (an empty window, or no row with an id): only then recount
+      val n = filtered.get.get("n").fold(windowed.count())(_.asInstanceOf[Long])
+      RunReport(n, inserted)
+    } finally raw.unpersist()
   }
 
   def main(args: Array[String]): Unit = {

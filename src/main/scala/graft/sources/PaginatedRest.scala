@@ -20,11 +20,11 @@ import org.apache.spark.sql.functions._
   *    long scans from outliving token expiry).
   *
   * Scale notes: the page id space is the only driver state — O(pages/wave)
-  * driver round-trips, each wave returning its page sizes through a tiny
-  * aggregate, while record payloads stay on executors (persisted per wave,
-  * never collected). The `fetch` function is the network boundary; real
-  * HTTP would honor Retry-After on 429 exactly where [[ThrottledException]]
-  * is caught.
+  * driver round-trips, each wave returning its page sizes through one
+  * shuffle-free job, while record payloads stay on executors (persisted
+  * per wave, never collected). The `fetch` function is the network
+  * boundary; real HTTP would honor Retry-After on 429 exactly where
+  * [[ThrottledException]] is caught.
   */
 object PaginatedRest {
 
@@ -125,7 +125,8 @@ object PaginatedRest {
     * while the scan runs (a page is fetched exactly once — downstream
     * actions must not re-invoke the network), then the UNION is persisted
     * (MEMORY_AND_DISK), materialized from the wave caches, and every
-    * per-wave cache is released before returning. The caller holds ONE
+    * per-wave cache is released before returning; a one-wave scan returns
+    * its wave, whose cache already holds every page. The caller holds ONE
     * cache handle — `result.unpersist()` when done frees everything; a
     * long scan no longer strands O(waves) cached RDDs for the session's
     * lifetime. */
@@ -148,23 +149,22 @@ object PaginatedRest {
         }
         .toDF("page_number", "start_position", "record")
       waveDf.persist() // fetched once; union materializes from this cache
-      val counts = waveDf.groupBy(col("page_number")).count()
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      // short page (or a page with zero rows, absent from counts) ends scan
-      done = (from until until).exists { p =>
-        counts.getOrElse(p + 1, 0L) < pageSize
-      }
+      // Partition i holds exactly page from+i, so one count per partition
+      // is the page sizes — and this job fills the wave cache.
+      val sizes = waveDf.rdd.mapPartitions(rows => Iterator(rows.size)).collect()
+      done = sizes.exists(_ < pageSize) // a short or empty page ends the scan
       waves ::= waveDf
       page = until
     }
-    waves.reverse.reduceOption(_ unionAll _) match {
-      case None =>
+    waves match {
+      case Nil =>
         Seq.empty[(Long, Long, String)]
           .toDF("page_number", "start_position", "record")
-      case Some(union) =>
-        val result = union.persist(
+      case only :: Nil => only // its filled wave cache is the one handle
+      case _ =>
+        val result = waves.reverse.reduce(_ unionAll _).persist(
           org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        result.count() // fill from wave caches — no page is re-fetched
+        result.rdd.count() // fill from the wave caches: no re-fetch, no shuffle
         waves.foreach(_.unpersist(blocking = false))
         result
     }

@@ -50,11 +50,11 @@ class BucketedStoreSpec extends SparkSpec {
   }
 
   test("job economy: the 2-sink store append runs strictly fewer jobs than two per-sink appends") {
-    // the point of the store: the per-sink touched-collect / probe-count
-    // / write action triples collapse to one collect plus one observed
-    // write. Raw Spark job counts include AQE shuffle-stage
-    // materialization on both paths, so the pin is RELATIVE: same data,
-    // same layouts, multi-append vs two toBucketedParquet appends.
+    // the point of the store: the per-sink touched-collect / observed
+    // write action pairs collapse to one collect plus one observed write.
+    // Raw Spark job counts include AQE shuffle-stage materialization on
+    // both paths, so the pin is RELATIVE: same data, same layouts,
+    // multi-append vs two toBucketedParquet appends.
     def countJobs(body: => Unit): Int = {
       val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
       val listener = new org.apache.spark.scheduler.SparkListener {
@@ -89,9 +89,9 @@ class BucketedStoreSpec extends SparkSpec {
     }
     val js = countJobs {
       assert(IdempotentAppend.toBucketedParquet(sinkDf(1L -> "x", 2L -> "y"),
-        s"$single/a", "id", numBuckets = 4, assumeNonEmpty = true) === 1L)
+        s"$single/a", "id", numBuckets = 4) === 1L)
       assert(IdempotentAppend.toBucketedParquet(keyDf("q" -> 20L),
-        s"$single/b", "k", numBuckets = 4, assumeNonEmpty = true) === 1L)
+        s"$single/b", "k", numBuckets = 4) === 1L)
     }
     info(s"multi-append jobs=$jm, per-sink appends jobs=$js")
     assert(jm < js, s"multi-append must run fewer jobs: $jm vs $js")

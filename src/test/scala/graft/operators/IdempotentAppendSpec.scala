@@ -64,7 +64,7 @@ class IdempotentAppendSpec extends SparkSpec {
     assert(IdempotentAppend.toBucketedParquet(one, sink, "id", numBuckets = 16) == 0)
   }
 
-  test("bucketed sink: custom bucketCols layout stays idempotent; needCount=false writes") {
+  test("bucketed sink: custom bucketCols layout stays idempotent; one observed write counts") {
     import spark.implicits._
     val sink = tmpDir("bucketcols")
     // dedup key is the composite __k, but the layout hashes (band, key) —
@@ -83,15 +83,13 @@ class IdempotentAppendSpec extends SparkSpec {
         IdempotentAppend.bucketExpr(Seq(col("band"), col("key")), 8).as("e"))
       .filter(col("d") =!= col("e")).count()
     assert(onDisk == 0, "disk bucket diverges from bucketExpr")
-    // needCount=false: single write job, rows land, count unreported (-1)
+    // the count comes from the write itself: rows land and are counted
     assert(IdempotentAppend.toBucketedParquet(b(51 to 60), sink, "__k",
-      numBuckets = 8, bucketCols = Seq("band", "key"),
-      needCount = false) == -1L)
+      numBuckets = 8, bucketCols = Seq("band", "key")) == 40L)
     assert(spark.read.parquet(sink).count() == 240)
-    // and the no-count append was itself probe-guarded: replaying it
-    // appends nothing new
-    IdempotentAppend.toBucketedParquet(b(51 to 60), sink, "__k",
-      numBuckets = 8, bucketCols = Seq("band", "key"), needCount = false)
+    // and the write was probe-guarded: replaying it appends nothing new
+    assert(IdempotentAppend.toBucketedParquet(b(51 to 60), sink, "__k",
+      numBuckets = 8, bucketCols = Seq("band", "key")) == 0L)
     assert(spark.read.parquet(sink).count() == 240)
   }
 
@@ -165,6 +163,10 @@ class IdempotentAppendSpec extends SparkSpec {
       .toDF("id", "v")
     assert(IdempotentAppend.toBucketedParquet(allNull, sink, "id", 8) == 0)
     assert(spark.read.parquet(sink).count() == 1)
+    // into a sink that does not exist yet: 0, and no directory created
+    val absent = tmpDir("bucketed_empty_new")
+    assert(IdempotentAppend.toBucketedParquet(allNull, absent, "id", 8) == 0)
+    assert(!new java.io.File(absent).exists())
   }
 
   test("jdbcKeys partitioned probe: >1 partition, identical anti-join result") {

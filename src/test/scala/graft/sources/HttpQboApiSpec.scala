@@ -100,6 +100,11 @@ class HttpQboApiSpec extends SparkSpec {
       val pages = df.groupBy("page_number").count()
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
       assert(pages == Map(1L -> 100L, 2L -> 100L, 3L -> 50L))
+      // fetch-once: two waves of two pages (the last one empty), and
+      // neither the read's page-size jobs nor the two actions above
+      // re-invoke the network
+      assert(state.queryCalls.get() == 4,
+        s"query endpoint hit ${state.queryCalls.get()} times for 4 pages")
       df.unpersist()
     }
   }
@@ -117,6 +122,10 @@ class HttpQboApiSpec extends SparkSpec {
       val slept = HttpSleepRecorder.queue.toArray(Array.empty[java.lang.Long])
       assert(slept.count(_ == 1000L) == 2,
         s"expected two 1000ms Retry-After sleeps, got ${slept.mkString(",")}")
+      // one wave of 8 pages (only the first holds records), each fetched
+      // once, plus the two throttled attempts
+      assert(state.queryCalls.get() == 8 + 2,
+        s"query endpoint hit ${state.queryCalls.get()} times")
       df.unpersist()
     }
   }

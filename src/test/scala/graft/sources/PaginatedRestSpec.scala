@@ -2,6 +2,8 @@ package graft.sources
 
 import java.util.concurrent.atomic.AtomicInteger
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
@@ -29,6 +31,12 @@ object RestFixtures {
       if (startPosition == 1 && FlakyState.count.getAndIncrement() < 2)
         throw new ThrottledException("429", Some(1L))
       else FixtureFetcher(29).fetch(startPosition, maxResults)
+  }
+  /** [[FixtureFetcher]]'s records without their "Id" field. */
+  final case class NoIdFetcher(total: Int) extends PageFetcher {
+    def fetch(startPosition: Long, maxResults: Int): Seq[String] =
+      FixtureFetcher(total).fetch(startPosition, maxResults)
+        .map(_.replaceFirst("\"Id\":\"\\d+\",", ""))
   }
   object AlwaysThrottled extends PageFetcher {
     def fetch(s: Long, m: Int): Seq[String] = throw new ThrottledException("429")
@@ -110,12 +118,40 @@ class PaginatedRestSpec extends SparkSpec {
 
   test("Pipeline.run: the composed main replicates the observed 29/29/0 run") {
     val sink = tmpDir("pipeline")
+    val cached = spark.sparkContext.getPersistentRDDs.keySet
     val first = graft.Pipeline.run(spark, graft.sources.MockQboApi(29), sink,
       "2024-01-01", "2025-12-31")
     assert(first.filtered == 29 && first.inserted == 29)
     val second = graft.Pipeline.run(spark, graft.sources.MockQboApi(29), sink,
       "2024-01-01", "2025-12-31")
     assert(second.inserted == 0)
+    // each run releases its extract cache
+    assert((spark.sparkContext.getPersistentRDDs.keySet -- cached).isEmpty)
+  }
+
+  test("Pipeline.run: a window no record falls in reports (0, 0) and adds no file") {
+    val sink = tmpDir("pipeline_nowindow")
+    graft.Pipeline.run(spark, graft.sources.MockQboApi(29), sink,
+      "2024-01-01", "2025-12-31")
+    def files(): Set[String] = {
+      val s = java.nio.file.Files.walk(java.nio.file.Paths.get(sink))
+      try s.iterator().asScala.map(_.toString).toSet finally s.close()
+    }
+    val before = files()
+    val r = graft.Pipeline.run(spark, graft.sources.MockQboApi(29), sink,
+      "2020-01-01", "2020-12-31")
+    assert(r == graft.Pipeline.RunReport(0, 0))
+    assert(files() == before)
+  }
+
+  test("Pipeline.run: window rows that all lack an id are counted, none inserted") {
+    // the append's stages come out empty, so the observed window count
+    // is absent and must not read as 0
+    val sink = tmpDir("pipeline_noid")
+    val r = graft.Pipeline.run(spark, NoIdFetcher(29), sink,
+      "2024-01-01", "2025-12-31")
+    assert(r == graft.Pipeline.RunReport(29, 0))
+    assert(!new java.io.File(sink).exists())
   }
 
   test("e2e: extract → window filter → envelope → idempotent append ×2 → report") {
