@@ -154,25 +154,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // MedianImpute's tiny-slice path uses a deliberately global window,
-    // hard-capped at MedianImpute.MaxWindowRows (≤4M rows — above that
-    // the bracket/recurse path avoids the global window entirely), so
-    // WindowExec's blanket "No Partition Defined" WARN is expected and
-    // was flooding the bench tail (VERDICT r6 nit). Silence that one
-    // package's logger; every other WARN still reaches stderr.
-    org.apache.logging.log4j.core.config.Configurator.setLevel(
-      "org.apache.spark.sql.execution.window", org.apache.logging.log4j.Level.ERROR)
+    val spark = GraftSession(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
 
     // Bench-battery parity (VERDICT r7 #5): every CORRECTNESS key is a
     // bench key — the r2-r7 plan-variant exclusion (4 queries held back
@@ -189,8 +171,9 @@ object Bench {
     // once so the first measured query doesn't pay JVM/classloader costs.
     // Root cause of the round-1 "q_x2 stall" (BENCH_r01 20.96 s, VERDICT r1
     // #4): the FIRST `lower()` call in the JVM pays ~10 s of one-time
-    // collation/case-mapping init (measured via graft.Probe: `lower()`
-    // select 10.9 s, identical query immediately after 0.4 s) — data-size
+    // collation/case-mapping init (measured in round 1 by timing one query
+    // twice in a fresh JVM: `lower()` select 10.9 s, the identical query
+    // immediately after 0.4 s) — data-size
     // independent and billed to whichever query hits it first. Touch that
     // path, plus JSON and window subsystems, in warmup instead.
     {

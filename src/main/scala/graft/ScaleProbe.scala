@@ -50,20 +50,14 @@ object ScaleProbe {
 
   def main(args: Array[String]): Unit = {
     val n = sys.env.getOrElse("SPARK_GRAFT_SCALE_N", "10000000").toLong
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
     val base = sys.env.getOrElse("SPARK_GRAFT_SCALE_DIR", "/tmp/graft_scale")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      // scan the ~10M-row fixture as ~256 partitions — the partition
-      // count a multi-TB table has with 128 MB splits; this is what the
-      // probe's partition bound is FOR
-      .config("spark.sql.files.maxPartitionBytes", (1 << 20).toString)
-      .config("spark.sql.files.openCostInBytes", "0")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // scan the ~10M-row fixture as ~256 partitions — the partition
+    // count a multi-TB table has with 128 MB splits; this is what the
+    // probe's partition bound is FOR
+    val spark = GraftSession(cpus,
+      "spark.sql.files.maxPartitionBytes" -> (1 << 20).toString,
+      "spark.sql.files.openCostInBytes" -> "0")
 
     // SPARK_GRAFT_SCALE_SECTIONS=events,paradedup selects which fixture
     // families run (each regenerates + measures for minutes).
@@ -137,8 +131,8 @@ object ScaleProbe {
       fact.write.mode("overwrite").parquet(s"$base/plain_fact")
       dim.write.mode("overwrite").parquet(s"$base/plain_dim")
       val tLayout = timeIt(1) {
-        Bucketed.materialize(fact, "graft_scale.b_fact", Seq("k"), cpus.toInt)
-        Bucketed.materialize(dim, "graft_scale.b_dim", Seq("k"), cpus.toInt)
+        Bucketed.materialize(fact, "graft_scale.b_fact", Seq("k"), cpus)
+        Bucketed.materialize(dim, "graft_scale.b_dim", Seq("k"), cpus)
       }
       def consumePlain(): Unit =
         spark.read.parquet(s"$base/plain_fact")

@@ -1,30 +1,11 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      // The generator has shipped events.ts as BOTH TIMESTAMP(NANOS)
-      // (rounds 1-6; Spark 4 rejects it without this flag, which reads
-      // epoch-nanos longs) and timestamp[us] (round 7+; flag is then a
-      // no-op). Keep it set and let Tables.epochMicros adapt per type.
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // expected WARN from MedianImpute's capped tiny-slice global window
-    // (see Bench for the full rationale) — keep the verify log readable
-    org.apache.logging.log4j.core.config.Configurator.setLevel(
-      "org.apache.spark.sql.execution.window", org.apache.logging.log4j.Level.ERROR)
+    val spark = GraftSession(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt)
     new java.io.File(outDir).mkdirs()
     // Dev filter: SPARK_GRAFT_ONLY=q_a,q_b dumps just those queries (the
     // driver never sets it, so the official gate always runs the full map).

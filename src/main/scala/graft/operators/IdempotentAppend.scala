@@ -37,20 +37,6 @@ object IdempotentAppend {
 
   val BucketCol = "__bucket"
 
-  // Stage timing to stderr when SPARK_GRAFT_TRACE is set (the same switch
-  // StreamingNearDup honors): the bucketed append is a multi-job protocol
-  // (partition-tuple collect, observed partitioned write) and wall-time
-  // questions need per-job answers.
-  private val trace = sys.env.contains("SPARK_GRAFT_TRACE")
-  private def timed[T](label: String)(body: => T): T =
-    if (!trace) body
-    else {
-      val t0 = System.nanoTime()
-      val r = body
-      System.err.println(f"[append] $label%-22s ${(System.nanoTime() - t0) / 1e9}%7.3f s")
-      r
-    }
-
   /** S7 + F3 + J1: the shared front half of the protocol. */
   private def prepare(batch: DataFrame, key: String): DataFrame =
     Dedup.byKey(WindowFilters.dropNullKeys(batch, key), key)
@@ -128,10 +114,9 @@ object IdempotentAppend {
     val bucket = bucketExpr(
       (if (bucketCols.isEmpty) Seq(key) else bucketCols).map(col), numBuckets)
     // bounded by windows in batch × numBuckets, never data-sized
-    val touched = timed("touched partitions")(
-      WindowFilters.dropNullKeys(batch, key)
-        .select(windowCol.map(col).toSeq :+ bucket.as(BucketCol): _*)
-        .distinct().collect())
+    val touched = WindowFilters.dropNullKeys(batch, key)
+      .select(windowCol.map(col).toSeq :+ bucket.as(BucketCol): _*)
+      .distinct().collect()
     if (touched.isEmpty) return 0L // S7, or all keys null (ADVICE r2)
     val withBucket = prepare(batch, key).withColumn(BucketCol, bucket)
     val fs = new Path(sinkPath).getFileSystem(
@@ -149,10 +134,9 @@ object IdempotentAppend {
       } else withBucket
     val obs = Observation()
     val writers = math.min(touched.length, spark.sparkContext.defaultParallelism)
-    timed("write")(
-      fresh.observe(obs, count(lit(1)).as("n"))
-        .repartition(writers, partCols.map(col): _*) // 1 file per partition dir
-        .write.mode("append").partitionBy(partCols: _*).parquet(sinkPath))
+    fresh.observe(obs, count(lit(1)).as("n"))
+      .repartition(writers, partCols.map(col): _*) // 1 file per partition dir
+      .write.mode("append").partitionBy(partCols: _*).parquet(sinkPath)
     // An all-replayed write is collapsed by AQE's empty-relation
     // propagation, which drops the metric: absent reads as 0.
     obs.get.get("n").fold(0L)(_.asInstanceOf[Long])
@@ -239,16 +223,15 @@ object IdempotentAppend {
     // persisting or executing twice.
     val touched: Map[String, Array[Long]] =
       if (!anyExists) Map.empty
-      else timed("touched partitions")(
-        sinks.map { s =>
+      else sinks.map { s =>
           val bucketSrc =
             (if (s.bucketCols.isEmpty) Seq(s.key) else s.bucketCols).map(col)
           WindowFilters.dropNullKeys(s.batch, s.key)
             .select(lit(s.name).as(SinkCol),
               bucketExpr(bucketSrc, numBuckets).as(BucketCol)) }
-          .reduce(_ unionAll _).distinct().collect()
-          .groupBy(_.getString(0))
-          .map { case (n, rs) => n -> rs.map(_.getLong(1)) })
+        .reduce(_ unionAll _).distinct().collect()
+        .groupBy(_.getString(0))
+        .map { case (n, rs) => n -> rs.map(_.getLong(1)) }
     val freshSides = prepared.map { case (s, df) =>
       val fresh =
         if (!exists(s.name) || touched.getOrElse(s.name, Array.empty).isEmpty)
@@ -266,10 +249,9 @@ object IdempotentAppend {
       count(when(col(SinkCol) === s.name, lit(1))).as(s.name))
     val observed = freshSides.reduce(_ unionAll _)
       .observe(obs, metrics.head, metrics.tail: _*)
-    timed("store write")(
-      observed.repartition(col(SinkCol), col(BucketCol))
-        .write.mode("append")
-        .partitionBy(SinkCol, BucketCol).parquet(storePath))
+    observed.repartition(col(SinkCol), col(BucketCol))
+      .write.mode("append")
+      .partitionBy(SinkCol, BucketCol).parquet(storePath)
     // A write whose fresh side is provably EMPTY is collapsed by AQE's
     // empty-relation propagation, which eliminates the CollectMetrics
     // node — the observation then reports NO metrics at all. That only

@@ -143,10 +143,8 @@ object PairedTest {
     // materializes the subtree ONCE (the Clusters discipline). Measured
     // A/B at sf0.1, alternated in one session, min-of-3: plain 1.20 s /
     // repart-only 1.29 / ckpt-only 1.08 / ckpt+repart 1.04. Blocks are
-    // high-cardinality (users), so the partitioning spreads at scale;
-    // probe-only variant switch below is for OptProbe's A/B, never set
-    // in queries.
-    val cells0 = df
+    // high-cardinality (users), so the partitioning spreads at scale.
+    val cells = df
       .filter(col(panelCol).isNotNull && col(blockCol).isNotNull &&
         col(treatCol).isNotNull && col(valueCol).isNotNull)
       .select(col(panelCol), col(blockCol).cast("string").as("__b"),
@@ -154,24 +152,16 @@ object PairedTest {
         col(valueCol).cast("long").as("__v"))
       .groupBy(col(panelCol), col("__b"), col("__c"))
       .agg(sum(col("__v")).as("__v"))
-    val cells = df.sparkSession.conf
-      .getOption("graft.friedman.variant").getOrElse("ckptrepart") match {
-      case "plain" => cells0
-      case "ckpt" => cells0.localCheckpoint(false)
-      case "repart" => cells0.repartition(col(panelCol), col("__b"))
-      case _ =>
-        val c = cells0.repartition(col(panelCol), col("__b"))
-          .localCheckpoint(false)
-        // bounded release pool (the PageRank/Clusters pattern): the
-        // checkpoint's blocks live until the result is materialized;
-        // evicted handles cannot be re-queried (re-derive by calling
-        // friedman again)
-        liveCells.synchronized {
-          liveCells.addLast(c)
-          if (liveCells.size > MaxLiveCells)
-            Checkpoints.release(liveCells.removeFirst())
-        }
-        c
+      .repartition(col(panelCol), col("__b"))
+      .localCheckpoint(false)
+    // bounded release pool (the PageRank/Clusters pattern): the
+    // checkpoint's blocks live until the result is materialized;
+    // evicted handles cannot be re-queried (re-derive by calling
+    // friedman again)
+    liveCells.synchronized {
+      liveCells.addLast(cells)
+      if (liveCells.size > MaxLiveCells)
+        Checkpoints.release(liveCells.removeFirst())
     }
     // panel-wide treatment count k, then complete blocks only
     val kPanel = cells.select(col(panelCol), col("__c")).distinct()

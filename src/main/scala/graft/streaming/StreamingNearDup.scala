@@ -59,18 +59,6 @@ object StreamingNearDup {
   def shinglesDir(h: String): String =
     graft.operators.IdempotentAppend.sinkPath(storeDir(h), "shingles")
 
-  // Stage timing to stderr when SPARK_GRAFT_TRACE is set — dedupBatch is
-  // a multi-action protocol, so wall-time questions need per-stage answers.
-  private val trace = sys.env.contains("SPARK_GRAFT_TRACE")
-  private def timed[T](label: String)(body: => T): T =
-    if (!trace) body
-    else {
-      val t0 = System.nanoTime()
-      val r = body
-      System.err.println(f"[dedupBatch] $label%-24s ${(System.nanoTime() - t0) / 1e9}%7.3f s")
-      r
-    }
-
   /** In-bucket pair expansion over side-tagged (band, key, id) rows —
     * side 0 = history, side 1 = batch. ONE groupBy produces both pair
     * families: in-batch (id_a < id_b, so the smallest id keeps) and
@@ -171,7 +159,7 @@ object StreamingNearDup {
       // only those directories are read, then a semi-join narrows to the
       // exact colliding keys. Cached: the relevant set feeds both the pair
       // expansion and the shingle-store pruning below.
-      if (!hasBands) timed("shingle+keys cache")(keys.count())
+      if (!hasBands) keys.count()
       val cand = cache(
         (if (!hasBands) NearDup.bucketPairs(keys, maxBucketSize)
          else {
@@ -179,9 +167,8 @@ object StreamingNearDup {
            // bounded set of bucket dirs (≤ historyBuckets longs, driver-
            // side) — only those directories are read, then a semi-join
            // narrows to the exact colliding keys before pair expansion.
-           val touched = timed("band buckets")(
-             keys.select(bandBucket.as("b")).distinct()
-               .collect().map(_.getLong(0)))
+           val touched = keys.select(bandBucket.as("b")).distinct()
+             .collect().map(_.getLong(0))
            val hist = spark.read.parquet(bandsDir(historyDir))
              .filter(col(IdempotentAppend.BucketCol).isin(touched: _*))
              .select(col("id"), col("band"), col("key"))
@@ -203,9 +190,8 @@ object StreamingNearDup {
         else {
           val idBucket =
             IdempotentAppend.bucketExpr(Seq(col("id_a")), historyBuckets)
-          val touched = timed("shingle buckets")(
-            cand.select(idBucket.as("b")).distinct()
-              .collect().map(_.getLong(0)))
+          val touched = cand.select(idBucket.as("b")).distinct()
+            .collect().map(_.getLong(0))
           if (touched.isEmpty) sh
           else sh.unionAll(
             spark.read.parquet(shinglesDir(historyDir))
@@ -218,8 +204,8 @@ object StreamingNearDup {
       // invalidate and recompute those caches against the batch's OWN
       // writes (every admitted doc then "collides" with itself, admitting
       // 0). Checkpointing cuts the path lineage; the pair set is tiny.
-      val confirmed = timed("confirm+checkpoint")(
-        NearDup.confirmJaccard(cand, allSh, threshold).localCheckpoint())
+      val confirmed =
+        NearDup.confirmJaccard(cand, allSh, threshold).localCheckpoint()
       checkpointed = Some(confirmed)
 
       val batchIds = sh.select(col("id"))
@@ -262,12 +248,11 @@ object StreamingNearDup {
       // over-counts and nAdmitted only OVER-estimates (nIn ≥ distinct ≥
       // dupHist + dupBatch + |admitted|), so the skip stays
       // conservative: nAdmitted == 0 still implies admitted = ∅.
-      val statRows = timed("stats counts")(
-        batchIds.select(lit(0).as("s"))
-          .unionAll(dupVsHistory.select(lit(1).as("s")))
-          .unionAll(dupInBatch.select(lit(2).as("s")))
-          .unionAll(selfIds.select(lit(3).as("s")))
-          .groupBy(col("s")).count().collect())
+      val statRows = batchIds.select(lit(0).as("s"))
+        .unionAll(dupVsHistory.select(lit(1).as("s")))
+        .unionAll(dupInBatch.select(lit(2).as("s")))
+        .unionAll(selfIds.select(lit(3).as("s")))
+        .groupBy(col("s")).count().collect()
       def statOf(s: Int): Long = statRows
         .collectFirst { case r: Row if r.getInt(0) == s => r.getLong(1) }
         .getOrElse(0L)
@@ -292,11 +277,11 @@ object StreamingNearDup {
         val admittedKeys = keys.join(admittedIds, Seq("id"), "left_semi")
           .select(concat(col("id"), lit(":"), col("band")).as("__k"),
             col("id"), col("band"), col("key"))
-        val counts = timed("store append")(IdempotentAppend.toBucketedStore(
+        val counts = IdempotentAppend.toBucketedStore(
           storeDir(historyDir), historyBuckets, Seq(
             IdempotentAppend.StoreSink("shingles", admittedSh, "id"),
             IdempotentAppend.StoreSink("bands", admittedKeys, "__k",
-              bucketCols = Seq("band", "key")))))
+              bucketCols = Seq("band", "key"))))
         counts("shingles")
       }
 

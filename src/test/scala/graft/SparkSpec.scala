@@ -6,20 +6,7 @@ import org.scalatest.funsuite.AnyFunSuite
 /** One SparkSession for the whole test JVM (Test/fork := true) — specs mix
   * this in; the session dies with the forked JVM. */
 object SparkTestSession {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  lazy val spark: SparkSession = GraftSession(4, "spark.app.name" -> "graft-test")
 }
 
 trait SparkSpec extends AnyFunSuite {

@@ -1,6 +1,5 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Measurement utility (not a test): recall@k of the two ANN scale paths
@@ -12,12 +11,7 @@ import org.apache.spark.sql.functions._
 object AnnRecallProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", 8)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession(8)
     import spark.implicits._
 
     val corpus = spark.read.parquet(s"$sfDir/embeddings.parquet")

@@ -1,6 +1,5 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Measurement utility (not a test): gate-configuration hits of the
@@ -10,12 +9,7 @@ import org.apache.spark.sql.functions._
   * Run: `sbt "Test/runMain graft.operators.MipsProbe"`. */
 object MipsProbe {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", 8)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession(8)
     import spark.implicits._
 
     for (sf <- Seq("sf0.001", "sf0.01", "sf0.1")) {

@@ -38,6 +38,13 @@ object RestFixtures {
       FixtureFetcher(total).fetch(startPosition, maxResults)
         .map(_.replaceFirst("\"Id\":\"\\d+\",", ""))
   }
+  /** [[FixtureFetcher]]'s records with record `bad` replaced by one that
+    * is not JSON. */
+  final case class MalformedFetcher(total: Int, bad: Int) extends PageFetcher {
+    def fetch(startPosition: Long, maxResults: Int): Seq[String] =
+      FixtureFetcher(total).fetch(startPosition, maxResults).zipWithIndex
+        .map { case (r, i) => if (startPosition + i == bad) "NOT JSON" else r }
+  }
   object AlwaysThrottled extends PageFetcher {
     def fetch(s: Long, m: Int): Seq[String] = throw new ThrottledException("429")
   }
@@ -152,6 +159,18 @@ class PaginatedRestSpec extends SparkSpec {
       "2024-01-01", "2025-12-31")
     assert(r == graft.Pipeline.RunReport(29, 0))
     assert(!new java.io.File(sink).exists())
+  }
+
+  test("Pipeline.run: a malformed record is dropped, the other 28 land once") {
+    val sink = tmpDir("pipeline_malformed")
+    val first = graft.Pipeline.run(spark, MalformedFetcher(29, bad = 7), sink,
+      "2024-01-01", "2025-12-31")
+    assert(first == graft.Pipeline.RunReport(28, 28))
+    val ids = spark.read.parquet(sink).select("id").collect().map(_.getString(0))
+    assert(ids.sorted.toSeq == (1 to 29).filter(_ != 7).map(_.toString).sorted)
+    val second = graft.Pipeline.run(spark, MalformedFetcher(29, bad = 7), sink,
+      "2024-01-01", "2025-12-31")
+    assert(second.inserted == 0)
   }
 
   test("e2e: extract → window filter → envelope → idempotent append ×2 → report") {
