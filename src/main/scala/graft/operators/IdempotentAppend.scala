@@ -42,20 +42,11 @@ object IdempotentAppend {
     Dedup.byKey(WindowFilters.dropNullKeys(batch, key), key)
 
   /** Append `batch` to the flat parquet dataset at `sinkPath`, inserting only
-    * rows whose `key` is not already present. Returns rows inserted
-    * (−1 with `needCount = false`: the count-then-write pair is replaced
-    * by ONE write job — for multi-append protocols that don't consume the
-    * count, e.g. StreamingNearDup's band append, one whole job of the
-    * anti-join plan is saved; the write may then append an empty part
-    * file when nothing was fresh, which parquet readers ignore).
+    * rows whose `key` is not already present. Returns rows inserted.
     * Probe scans the whole sink key column — fine for small/medium sinks;
     * use [[toBucketedParquet]] when the sink outgrows its batches. */
-  def toParquet(batch: DataFrame, sinkPath: String, key: String,
-      assumeNonEmpty: Boolean = false, needCount: Boolean = true): Long = {
-    // S7: cheap limit(1) short-circuit. `assumeNonEmpty` skips the probe
-    // JOB when the caller has already counted the batch (a multi-append
-    // protocol otherwise pays one extra full-plan job per sink).
-    if (!assumeNonEmpty && batch.isEmpty) return 0L
+  def toParquet(batch: DataFrame, sinkPath: String, key: String): Long = {
+    if (batch.isEmpty) return 0L // S7: cheap limit(1) short-circuit
     val spark = batch.sparkSession
     val deduped = prepare(batch, key)
     val fs = new Path(sinkPath).getFileSystem(
@@ -65,10 +56,6 @@ object IdempotentAppend {
         val existingKeys = spark.read.parquet(sinkPath).select(col(key))
         deduped.join(existingKeys, Seq(key), "left_anti")
       } else deduped
-    if (!needCount) {
-      fresh.write.mode("append").parquet(sinkPath)
-      return -1L
-    }
     fresh.persist()
     try {
       val n = fresh.count()
@@ -83,60 +70,49 @@ object IdempotentAppend {
   def bucketExpr(cols: Seq[Column], numBuckets: Int): Column =
     pmod(xxhash64(cols: _*), lit(numBuckets))
 
-  /** Scale-safe variant: sink partitioned by a key-hash bucket (and
-    * optionally by an extraction-window column first — the reference's
-    * re-runnable-window model, SURVEY §7.1 M5: re-running window W probes
-    * only W's directories); the probe reads only the partitions the batch
-    * touches. `numBuckets` sizes the pruning granularity: at a 100 TB sink,
-    * 1024 buckets ≈ 100 GB probed per touched bucket.
+  /** The buckets of a batch's non-null keys, as [[toBucketedParquet]]
+    * lays them out — bounded by `numBuckets`, never data-sized. */
+  private def touchedBuckets(batch: DataFrame, key: String,
+      numBuckets: Int): Array[Long] =
+    WindowFilters.dropNullKeys(batch, key)
+      .select(bucketExpr(Seq(col(key)), numBuckets)).distinct()
+      .collect().map(_.getLong(0))
+
+  /** Scale-safe variant: the sink is partitioned by a key-hash bucket and
+    * the probe reads only the buckets the batch touches. `numBuckets` sizes
+    * the pruning granularity: at a 100 TB sink, 1024 buckets ≈ 100 GB
+    * probed per touched bucket.
     *
     * Two actions per batch, as in [[toBucketedStore]]: a collect of the
-    * touched partition tuples from the RAW null-filtered batch (a safe
-    * superset — dedup only removes rows — that skips the dedup shuffle;
-    * empty is the S7 short-circuit, before anything touches the sink),
-    * then ONE write of the pruned anti-join, its inserted count observed
-    * on the write itself, so nothing is persisted. The write hash-
-    * partitions on the partition columns into min(touched, parallelism)
-    * tasks — a repartition by number, which AQE never coalesces: ONE file
-    * per touched directory (small files kill partitioned sinks at
-    * scale), the files written in parallel. */
+    * touched buckets from the RAW null-filtered batch (a safe superset —
+    * dedup only removes rows — that skips the dedup shuffle; empty is the
+    * S7 short-circuit, before anything touches the sink), then ONE write of
+    * the pruned anti-join, its inserted count observed on the write itself,
+    * so nothing is persisted. The write hash-partitions on the bucket into
+    * min(touched, parallelism) tasks — a repartition by number, which AQE
+    * never coalesces: ONE file per touched bucket directory (small files
+    * kill partitioned sinks at scale), the files written in parallel. */
   def toBucketedParquet(batch: DataFrame, sinkPath: String, key: String,
-      numBuckets: Int = 256, windowCol: Option[String] = None,
-      bucketCols: Seq[String] = Nil): Long = {
+      numBuckets: Int = 256): Long = {
     val spark = batch.sparkSession
-    val partCols = windowCol.toSeq :+ BucketCol
-    // `bucketCols` decouples the PROBE layout from the dedup key: e.g.
-    // StreamingNearDup's band store dedups on __k = "id:band" (append
-    // idempotency) but is probed by (band, key) — bucketing on the probe
-    // columns is what lets a batch's band lookup prune to its own
-    // directories. A replayed row hashes to the same bucket either way,
-    // so the idempotency anti-join below still sees its existing copy.
-    val bucket = bucketExpr(
-      (if (bucketCols.isEmpty) Seq(key) else bucketCols).map(col), numBuckets)
-    // bounded by windows in batch × numBuckets, never data-sized
-    val touched = WindowFilters.dropNullKeys(batch, key)
-      .select(windowCol.map(col).toSeq :+ bucket.as(BucketCol): _*)
-      .distinct().collect()
+    val touched = touchedBuckets(batch, key, numBuckets)
     if (touched.isEmpty) return 0L // S7, or all keys null (ADVICE r2)
-    val withBucket = prepare(batch, key).withColumn(BucketCol, bucket)
+    val withBucket = prepare(batch, key)
+      .withColumn(BucketCol, bucketExpr(Seq(col(key)), numBuckets))
     val fs = new Path(sinkPath).getFileSystem(
       spark.sparkContext.hadoopConfiguration)
     val fresh =
       if (fs.exists(new Path(sinkPath))) {
-        val pruned = touched.map { r =>
-          partCols.zipWithIndex.map { case (c, i) => col(c) === lit(r.get(i)) }
-            .reduce(_ && _)
-        }.reduce(_ || _)
         val existingKeys = spark.read.parquet(sinkPath)
-          .filter(pruned) // partition pruning on window+bucket dirs
+          .filter(col(BucketCol).isin(touched.toIndexedSeq: _*))
           .select(col(key))
         withBucket.join(existingKeys, Seq(key), "left_anti")
       } else withBucket
     val obs = Observation()
     val writers = math.min(touched.length, spark.sparkContext.defaultParallelism)
     fresh.observe(obs, count(lit(1)).as("n"))
-      .repartition(writers, partCols.map(col): _*) // 1 file per partition dir
-      .write.mode("append").partitionBy(partCols: _*).parquet(sinkPath)
+      .repartition(writers, col(BucketCol)) // 1 file per bucket dir
+      .write.mode("append").partitionBy(BucketCol).parquet(sinkPath)
     // An all-replayed write is collapsed by AQE's empty-relation
     // propagation, which drops the metric: absent reads as 0.
     obs.get.get("n").fold(0L)(_.asInstanceOf[Long])
@@ -267,12 +243,9 @@ object IdempotentAppend {
     * the relation's files before any partition filter applies). */
   def probeFiles(batch: DataFrame, sinkPath: String, key: String,
       numBuckets: Int = 256): Array[String] = {
-    val spark = batch.sparkSession
-    val touched = prepare(batch, key)
-      .withColumn(BucketCol, pmod(xxhash64(col(key)), lit(numBuckets)))
-      .select(BucketCol).distinct().collect().map(_.getLong(0))
-    spark.read.parquet(sinkPath)
-      .filter(col(BucketCol).isin(touched: _*))
+    val touched = touchedBuckets(batch, key, numBuckets)
+    batch.sparkSession.read.parquet(sinkPath)
+      .filter(col(BucketCol).isin(touched.toIndexedSeq: _*))
       .select(input_file_name().as("f")).distinct()
       .collect().map(_.getString(0))
   }

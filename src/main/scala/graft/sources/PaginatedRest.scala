@@ -78,10 +78,12 @@ object PaginatedRest {
     *
     * Task closures are deserialized PER TASK, so a per-instance cache
     * alone means one token round-trip per task — at 1000 executors × 32
-    * tasks that hammers the token endpoint 32000×. Pass `shareKey` (e.g.
-    * the client id) to share the cached token JVM-wide: every task on an
-    * executor reuses one token, refreshed atomically (ConcurrentHashMap
-    * .compute — exactly one fetch per executor per expiry window). */
+    * tasks that hammers the token endpoint 32000×. Pass `shareKey` to share
+    * the cached token JVM-wide: every task on an executor reuses one token,
+    * refreshed atomically (ConcurrentHashMap.compute — exactly one fetch
+    * per executor per expiry window). The key must name the client AND the
+    * token endpoint (e.g. `clientId@tokenUrl`): one client id against the
+    * sandbox and the production endpoint must not share a bearer token. */
   final class RefreshingToken(
       fetch: () => (String, Long),
       marginMs: Long = 60000L,
@@ -112,6 +114,9 @@ object PaginatedRest {
       new java.util.concurrent.ConcurrentHashMap[String, (String, Long)]()
   }
 
+  /** Guard against an API that never returns a short page. */
+  private val MaxPages = 1000000L
+
   /** Scan all pages: waves of `wave` pages fetched concurrently by
     * executors; the scan stops after the first wave containing a short or
     * empty page (S1 short-page-stop semantics, one wave's worth of
@@ -131,14 +136,13 @@ object PaginatedRest {
     * long scan no longer strands O(waves) cached RDDs for the session's
     * lifetime. */
   def read(spark: SparkSession, fetcher: PageFetcher, pageSize: Int = 100,
-      wave: Int = 8, retry: RetryPolicy = RetryPolicy(),
-      maxPages: Long = 1000000L): DataFrame = {
+      wave: Int = 8, retry: RetryPolicy = RetryPolicy()): DataFrame = {
     import spark.implicits._
     var waves = List.empty[DataFrame]
     var page = 0L
     var done = false
-    while (!done && page < maxPages) {
-      val (from, until) = (page, math.min(page + wave, maxPages))
+    while (!done && page < MaxPages) {
+      val (from, until) = (page, math.min(page + wave, MaxPages))
       val waveDf = spark.range(from, until, 1, (until - from).toInt)
         .mapPartitions { pages =>
           pages.flatMap { p =>

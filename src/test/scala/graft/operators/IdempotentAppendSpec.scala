@@ -62,55 +62,55 @@ class IdempotentAppendSpec extends SparkSpec {
       "probed files should come from bucket partition dirs")
     // and appending it stays idempotent across bucket layout
     assert(IdempotentAppend.toBucketedParquet(one, sink, "id", numBuckets = 16) == 0)
+    // compaction: one file per touched bucket partition dir
+    val after = spark.read.parquet(sink)
+    val files = after.select(input_file_name()).distinct().count()
+    val dirs = after.select(IdempotentAppend.BucketCol).distinct().count()
+    assert(files == dirs, s"$files files for $dirs partition dirs")
   }
 
-  test("bucketed sink: custom bucketCols layout stays idempotent; one observed write counts") {
-    import spark.implicits._
-    val sink = tmpDir("bucketcols")
-    // dedup key is the composite __k, but the layout hashes (band, key) —
-    // the StreamingNearDup band-store shape
-    def b(ids: Range) = ids.flatMap(i => (0 until 4).map(bd =>
-      (s"$i:$bd", i.toLong, bd, s"k$i$bd"))).toDF("__k", "id", "band", "key")
-    assert(IdempotentAppend.toBucketedParquet(b(1 to 50), sink, "__k",
-      numBuckets = 8, bucketCols = Seq("band", "key")) == 200)
+  test("bucketed sink: disk bucket = bucketExpr; one observed write counts") {
+    val sink = tmpDir("bucketexpr")
+    def b(ids: Range) = ids.map(i => i -> s"v$i").toDF("id", "v")
+    assert(IdempotentAppend.toBucketedParquet(b(1 to 200), sink, "id", 8) == 200)
     // replay: every row hashes to the same bucket, the probe finds it
-    assert(IdempotentAppend.toBucketedParquet(b(1 to 50), sink, "__k",
-      numBuckets = 8, bucketCols = Seq("band", "key")) == 0)
+    assert(IdempotentAppend.toBucketedParquet(b(1 to 200), sink, "id", 8) == 0)
     // bucket assignment on disk matches the shared bucketExpr — a prober
     // using it prunes consistently with the writer
     val onDisk = spark.read.parquet(sink)
       .select(col(IdempotentAppend.BucketCol).cast("long").as("d"),
-        IdempotentAppend.bucketExpr(Seq(col("band"), col("key")), 8).as("e"))
+        IdempotentAppend.bucketExpr(Seq(col("id")), 8).as("e"))
       .filter(col("d") =!= col("e")).count()
     assert(onDisk == 0, "disk bucket diverges from bucketExpr")
     // the count comes from the write itself: rows land and are counted
-    assert(IdempotentAppend.toBucketedParquet(b(51 to 60), sink, "__k",
-      numBuckets = 8, bucketCols = Seq("band", "key")) == 40L)
+    assert(IdempotentAppend.toBucketedParquet(b(201 to 240), sink, "id", 8) == 40L)
     assert(spark.read.parquet(sink).count() == 240)
     // and the write was probe-guarded: replaying it appends nothing new
-    assert(IdempotentAppend.toBucketedParquet(b(51 to 60), sink, "__k",
-      numBuckets = 8, bucketCols = Seq("band", "key")) == 0L)
+    assert(IdempotentAppend.toBucketedParquet(b(201 to 240), sink, "id", 8) == 0L)
     assert(spark.read.parquet(sink).count() == 240)
   }
 
-  test("window-partitioned bucketed sink: probe prunes to the batch's window") {
-    import spark.implicits._
-    val sink = tmpDir("windowed")
-    def b(w: String, ids: Range) =
-      ids.map(i => (i, s"v$i", w)).toDF("id", "v", "win")
-    assert(IdempotentAppend.toBucketedParquet(
-      b("2024-01", 1 to 100), sink, "id", 8, windowCol = Some("win")) == 100)
-    assert(IdempotentAppend.toBucketedParquet(
-      b("2024-02", 101 to 200), sink, "id", 8, windowCol = Some("win")) == 100)
-    // re-run of window 1 inserts 0 and its probe touches only win=2024-01 dirs
-    assert(IdempotentAppend.toBucketedParquet(
-      b("2024-01", 1 to 100), sink, "id", 8, windowCol = Some("win")) == 0)
-    val all = spark.read.parquet(sink)
-    assert(all.count() == 200)
-    // compaction: one file per touched (window, bucket) partition dir
-    val files = all.select(input_file_name()).distinct().count()
-    val dirs = all.select("win", IdempotentAppend.BucketCol).distinct().count()
-    assert(files == dirs, s"$files files for $dirs partition dirs")
+  test("bucketed sink: a crash between the touched collect and the write commits nothing") {
+    val sink = tmpDir("bucketed_crash")
+    assert(IdempotentAppend.toBucketedParquet(batch((1 to 10).map(i => i -> s"v$i"): _*),
+      sink, "id", 8) == 10)
+    // The payload UDF throws for id 25. Column pruning keeps it out of the
+    // touched collect, whose projection runs clean, so the call fails in
+    // the write. The ids come from a range, not a local Seq, so the
+    // optimizer cannot fold the UDF over them at plan time.
+    val payload = udf((i: Int) =>
+      if (i == 25) throw new IllegalStateException("payload fault") else s"v$i")
+    val ids = spark.range(1, 31).select(col("id").cast("int").as("id"))
+    val faulty = ids.withColumn("v", payload(col("id")))
+    assert(faulty.select(IdempotentAppend.bucketExpr(Seq(col("id")), 8)).distinct()
+      .collect().nonEmpty)
+    intercept[Exception](IdempotentAppend.toBucketedParquet(faulty, sink, "id", 8))
+    assert(spark.read.parquet(sink).count() == 10, "a failed write left rows behind")
+    val healed = ids.withColumn("v", concat(lit("v"), col("id").cast("string")))
+    assert(IdempotentAppend.toBucketedParquet(healed, sink, "id", 8) == 20)
+    assert(IdempotentAppend.toBucketedParquet(healed, sink, "id", 8) == 0)
+    val after = spark.read.parquet(sink)
+    assert(after.count() == 30 && after.select("id").distinct().count() == 30)
   }
 
   test("JDBC (Derby embedded): conflict-skipping insert is idempotent") {

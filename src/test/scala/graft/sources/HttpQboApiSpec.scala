@@ -130,29 +130,6 @@ class HttpQboApiSpec extends SparkSpec {
     }
   }
 
-  test("DataSourceV2 over real HTTP: partition-per-page with OAuth wiring") {
-    withServer(total = 250) { (base, state) =>
-      val df = spark.read.format("graft.sources.RestDataSourceV2")
-        .option("factory", "graft.sources.HttpFetcherFactory")
-        .option("baseUrl", s"$base/query")
-        .option("entity", "Customer")
-        .option("tokenUrl", s"$base/token")
-        .option("clientId", "cid")
-        .option("clientSecret", "secret")
-        .option("pageSize", "100")
-        .option("pages", "4") // overshoot: page 4 comes back empty
-        .load()
-      assert(df.count() == 250)
-      assert(df.rdd.getNumPartitions == 4)
-      val pages = df.groupBy("page_number").count()
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      assert(pages == Map(1L -> 100L, 2L -> 100L, 3L -> 50L))
-      // JVM-wide token cache: pages shared one OAuth round-trip
-      assert(state.tokenCalls.get() == 1,
-        s"token endpoint hit ${state.tokenCalls.get()} times")
-    }
-  }
-
   test("non-200/429 responses fail the task (no silent empty page)") {
     withServer(total = 5) { (base, _) =>
       val fetcher = HttpQboApi.HttpPageFetcher(s"$base/query", "Customer",

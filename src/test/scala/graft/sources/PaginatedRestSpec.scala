@@ -107,22 +107,6 @@ class PaginatedRestSpec extends SparkSpec {
     assert(after.isEmpty, "the caller's single unpersist must free all caches")
   }
 
-  test("DataSourceV2 source: partition-per-page read with overshoot tolerance") {
-    val df = spark.read.format("graft.sources.RestDataSourceV2")
-      .option("factory", "graft.sources.MockQboApiFactory")
-      .option("total", "250")
-      .option("pageSize", "100")
-      .option("pages", "5") // overshoot: pages 4-5 come back empty
-      .load()
-    assert(df.schema == graft.sources.RestDataSourceV2.Schema)
-    assert(df.count() == 250)
-    val pages = df.groupBy("page_number").count()
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(pages == Map(1L -> 100L, 2L -> 100L, 3L -> 50L))
-    // V2 partition-per-page: the scan plans one input partition per page
-    assert(df.rdd.getNumPartitions == 5)
-  }
-
   test("Pipeline.run: the composed main replicates the observed 29/29/0 run") {
     val sink = tmpDir("pipeline")
     val cached = spark.sparkContext.getPersistentRDDs.keySet
