@@ -5,6 +5,7 @@ import java.sql.{Connection, DriverManager, PreparedStatement}
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, Observation}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{IntegerType, StructField, StructType}
 
 /** J2/J3/S5-S7: the idempotent-append protocol — the reference's core sink
   * semantics (save_to_raw_customers_py.py:46-61; contract README.md:176-187):
@@ -25,7 +26,10 @@ import org.apache.spark.sql.functions._
   *    (`__bucket = pmod(xxhash64(key), numBuckets)`), and the probe prunes
   *    to only the partition directories whose bucket appears in the batch —
   *    probe cost is O(sink/numBuckets × touched buckets), independent of
-  *    total sink size for small batches.
+  *    total sink size for small batches. The probe lists the sink root once
+  *    and then only the touched directories (O(touched dirs), never every
+  *    file of the sink), and reads them with a known schema (the key and
+  *    the bucket), so no job infers a schema from parquet footers.
   *  - The empty-input short-circuit is never a full `count()` (VERDICT r1
   *    S7 note): a `limit(1)`-backed `isEmpty`, or an empty touched collect.
   *  - The reference's fallback blind append on error
@@ -53,7 +57,8 @@ object IdempotentAppend {
       spark.sparkContext.hadoopConfiguration)
     val fresh =
       if (fs.exists(new Path(sinkPath))) {
-        val existingKeys = spark.read.parquet(sinkPath).select(col(key))
+        val existingKeys = spark.read.schema(keySchema(batch, key))
+          .parquet(sinkPath).select(col(key))
         deduped.join(existingKeys, Seq(key), "left_anti")
       } else deduped
     fresh.persist()
@@ -78,10 +83,40 @@ object IdempotentAppend {
       .select(bucketExpr(Seq(col(key)), numBuckets)).distinct()
       .collect().map(_.getLong(0))
 
+  /** The batch's `key` field as a read schema: a probe that names its
+    * schema runs no footer-inference job over the sink. */
+  private def keySchema(batch: DataFrame, key: String): StructType =
+    StructType(Seq(batch.select(col(key)).schema.head.copy(nullable = true)))
+
+  /** The `key` column of the bucketed dataset at `sinkPath`, read from the
+    * `touched` bucket directories only, or None when none of them exists
+    * yet. One listing of the sink root picks the directories; they are
+    * read under `basePath`, so `__bucket` stays a column, with `batch`'s
+    * key and the bucket as a known schema. */
+  private def probeKeys(batch: DataFrame, key: String, sinkPath: String,
+      touched: Array[Long]): Option[DataFrame] = {
+    val spark = batch.sparkSession
+    val root = new Path(sinkPath)
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val names = touched.map(b => s"$BucketCol=$b").toSet
+    val dirs =
+      if (!fs.exists(root)) Array.empty[String]
+      else fs.listStatus(root)
+        .filter(s => s.isDirectory && names(s.getPath.getName))
+        .map(_.getPath.toString)
+    if (dirs.isEmpty) None
+    else Some(spark.read
+      .schema(keySchema(batch, key).add(StructField(BucketCol, IntegerType)))
+      .option("basePath", sinkPath).parquet(dirs.toIndexedSeq: _*)
+      .select(col(key)))
+  }
+
   /** Scale-safe variant: the sink is partitioned by a key-hash bucket and
     * the probe reads only the buckets the batch touches. `numBuckets` sizes
     * the pruning granularity: at a 100 TB sink, 1024 buckets ≈ 100 GB
-    * probed per touched bucket.
+    * probed per touched bucket. The probe lists only the touched bucket
+    * directories and reads them with a known schema (the batch's key and
+    * `__bucket`): no listing of the whole sink, no footer-inference job.
     *
     * Two actions per batch, as in [[toBucketedStore]]: a collect of the
     * touched buckets from the RAW null-filtered batch (a safe superset —
@@ -99,15 +134,8 @@ object IdempotentAppend {
     if (touched.isEmpty) return 0L // S7, or all keys null (ADVICE r2)
     val withBucket = prepare(batch, key)
       .withColumn(BucketCol, bucketExpr(Seq(col(key)), numBuckets))
-    val fs = new Path(sinkPath).getFileSystem(
-      spark.sparkContext.hadoopConfiguration)
-    val fresh =
-      if (fs.exists(new Path(sinkPath))) {
-        val existingKeys = spark.read.parquet(sinkPath)
-          .filter(col(BucketCol).isin(touched.toIndexedSeq: _*))
-          .select(col(key))
-        withBucket.join(existingKeys, Seq(key), "left_anti")
-      } else withBucket
+    val fresh = probeKeys(batch, key, sinkPath, touched)
+      .fold(withBucket)(withBucket.join(_, Seq(key), "left_anti"))
     val obs = Observation()
     val writers = math.min(touched.length, spark.sparkContext.defaultParallelism)
     fresh.observe(obs, count(lit(1)).as("n"))
@@ -187,9 +215,8 @@ object IdempotentAppend {
         }
       df.select(cols: _*)
     }
-    val exists = sinks.map(s => s.name -> fs.exists(
-      new Path(sinkPath(storePath, s.name)))).toMap
-    val anyExists = exists.values.exists(identity)
+    val anyExists = sinks.exists(s =>
+      fs.exists(new Path(sinkPath(storePath, s.name))))
     // Touched buckets from the RAW null-filtered batches, NOT the prepared
     // frames: the bucket value depends only on the bucket columns, and the
     // dedup in prepare() can only REMOVE rows, so this set is a (safe)
@@ -209,15 +236,9 @@ object IdempotentAppend {
         .groupBy(_.getString(0))
         .map { case (n, rs) => n -> rs.map(_.getLong(1)) }
     val freshSides = prepared.map { case (s, df) =>
-      val fresh =
-        if (!exists(s.name) || touched.getOrElse(s.name, Array.empty).isEmpty)
-          df
-        else {
-          val existingKeys = spark.read.parquet(sinkPath(storePath, s.name))
-            .filter(col(BucketCol).isin(touched(s.name).toIndexedSeq: _*))
-            .select(col(s.key))
-          df.join(existingKeys, Seq(s.key), "left_anti")
-        }
+      val fresh = probeKeys(s.batch, s.key, sinkPath(storePath, s.name),
+          touched.getOrElse(s.name, Array.empty[Long]))
+        .fold(df)(df.join(_, Seq(s.key), "left_anti"))
       aligned(s.name, fresh)
     }
     val obs = Observation()
@@ -238,17 +259,14 @@ object IdempotentAppend {
   }
 
   /** Probe helper for tests/monitoring: the sink files a batch's probe
-    * ACTUALLY reads (demonstrates partition pruning — measured with
-    * `input_file_name()` at execution, because `DataFrame.inputFiles` lists
-    * the relation's files before any partition filter applies). */
+    * ACTUALLY reads (demonstrates bucket pruning — measured with
+    * `input_file_name()` at execution, through the same probe read the
+    * appends use). */
   def probeFiles(batch: DataFrame, sinkPath: String, key: String,
-      numBuckets: Int = 256): Array[String] = {
-    val touched = touchedBuckets(batch, key, numBuckets)
-    batch.sparkSession.read.parquet(sinkPath)
-      .filter(col(BucketCol).isin(touched.toIndexedSeq: _*))
-      .select(input_file_name().as("f")).distinct()
-      .collect().map(_.getString(0))
-  }
+      numBuckets: Int = 256): Array[String] =
+    probeKeys(batch, key, sinkPath, touchedBuckets(batch, key, numBuckets))
+      .fold(Array.empty[String])(_.select(input_file_name().as("f")).distinct()
+        .collect().map(_.getString(0)))
 
   /** How the conflict-skipping INSERT is phrased per backend (S5/S6).
     * The reference sink is Postgres; Derby stands in for tests (the only

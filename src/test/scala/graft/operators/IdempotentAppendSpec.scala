@@ -69,6 +69,49 @@ class IdempotentAppendSpec extends SparkSpec {
     assert(files == dirs, s"$files files for $dirs partition dirs")
   }
 
+  test("bucketed sink: a small batch's probe runs no listing job and no footer job") {
+    // Spark lists more than 32 directories in a job of its own, and a
+    // parquet read without a schema reads footers in another; both run
+    // outside any query execution. The probe of a batch touching ≤ 32 of
+    // 64 buckets lists only its own directories and names its schema.
+    val sink = tmpDir("bucketed_listing")
+    val base = (1 to 1000).map(i => i -> s"v$i").toDF("id", "v")
+    assert(IdempotentAppend.toBucketedParquet(base, sink, "id", 64) == 1000)
+    val tag = "graft.spec.probe"
+    val listing, inferring = new java.util.concurrent.atomic.AtomicInteger(0)
+    val drained = new java.util.concurrent.CountDownLatch(1)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        Option(j.properties).flatMap(p => Option(p.getProperty(tag))) match {
+          case Some("append") =>
+            val desc = Option(j.properties.getProperty("spark.job.description"))
+            if (desc.exists(_.startsWith("Listing leaf files"))) listing.incrementAndGet()
+            else if (j.properties.getProperty("spark.sql.execution.id") == null)
+              inferring.incrementAndGet()
+          case Some("marker") => drained.countDown()
+          case _ =>
+        }
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      sc.setLocalProperty(tag, "append")
+      assert(IdempotentAppend.toBucketedParquet(batch(5 -> "x", 1001 -> "y"),
+        sink, "id", 64) == 1)
+      // the listener sees job starts in order: once the marker job's
+      // arrives, every start before it has been counted
+      sc.setLocalProperty(tag, "marker")
+      sc.parallelize(Seq(1), 1).count()
+      assert(drained.await(30, java.util.concurrent.TimeUnit.SECONDS))
+    } finally {
+      sc.setLocalProperty(tag, null)
+      sc.removeSparkListener(listener)
+    }
+    assert(listing.get == 0, s"${listing.get} listing job(s)")
+    assert(inferring.get == 0, s"${inferring.get} schema-inference job(s)")
+  }
+
   test("bucketed sink: disk bucket = bucketExpr; one observed write counts") {
     val sink = tmpDir("bucketexpr")
     def b(ids: Range) = ids.map(i => i -> s"v$i").toDF("id", "v")

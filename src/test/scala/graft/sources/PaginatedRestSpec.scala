@@ -69,6 +69,21 @@ class PaginatedRestSpec extends SparkSpec {
     val pages = df.groupBy("page_number").count()
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(pages == Map(1L -> 100L, 2L -> 100L, 3L -> 50L))
+    // the waves come back flat: at most one partition per slot, each
+    // page's rows once — also when the scan runs more waves than slots
+    val slots = spark.sparkContext.defaultParallelism
+    val flat = PaginatedRest.read(spark, FixtureFetcher(250), pageSize = 25, wave = 2)
+    try {
+      for (d <- Seq(df, flat)) {
+        assert(d.rdd.getNumPartitions <= slots,
+          s"${d.rdd.getNumPartitions} partitions for $slots slots")
+        assert(d.count() == 250)
+      }
+      val perPage = flat.groupBy("page_number")
+        .agg(count(lit(1)).as("n"), countDistinct(col("record")).as("d"))
+        .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
+      assert(perPage == (1L to 10L).map(_ -> (25L, 25L)).toMap)
+    } finally { df.unpersist(); flat.unpersist() }
   }
 
   test("exact page boundary: total == k*pageSize terminates via empty page") {
