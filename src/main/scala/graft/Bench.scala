@@ -209,9 +209,10 @@ object Bench {
       // query ran first otherwise; measured on q_t9).
       graft.operators.Decontaminate.overlaps(docs3, docs3.limit(1),
         "doc_id", "text", shingleLen = 2).count()
-      graft.operators.Clusters.connectedComponents(
-        docs3.select(col("doc_id").as("id_a"), (col("doc_id") + 1).as("id_b"))).count()
-      graft.operators.Clusters.releaseResults()
+      val cc = graft.operators.Clusters.connectedComponents(
+        docs3.select(col("doc_id").as("id_a"), (col("doc_id") + 1).as("id_b")))
+      cc.count()
+      graft.operators.Checkpoints.release(cc)
       graft.operators.Boilerplate.stats(docs3, "doc_id", "text",
         shingleLen = 2, minDf = 2).count()
       graft.operators.NearDup.releaseMaterialized()

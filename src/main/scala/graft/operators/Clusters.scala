@@ -29,8 +29,9 @@ import org.apache.spark.sql.functions._
   * `localCheckpoint`ed — the canonical Spark treatment for iterative
   * algorithms (GraphFrames does the same): the plan collapses to a
   * LogicalRDD leaf, keeping analysis constant-time per round.
-  * Intermediate rounds' checkpoint blocks are released eagerly; result
-  * label tables live in a bounded pool (see [[MaxLiveResults]]).
+  * Intermediate rounds' checkpoint blocks are released eagerly; the
+  * result's label table lives as long as the caller holds the result
+  * ([[Checkpoints]]).
   *
   * Convergence is detected without an extra join: labels are initialized
   * at min(id, min neighbor) and only ever DECREASE, so the label sum is a
@@ -48,12 +49,6 @@ object Clusters {
     * smallest id reachable from the node (component minimum), so the
     * mapping is deterministic and engine-portable. Ids follow the
     * near-dup battery's bigint contract.
-    *
-    * The result is served from a materialized (localCheckpoint-backed)
-    * label table held in a bounded pool of [[MaxLiveResults]]; when a
-    * result is evicted its storage is released and a STALE handle cannot
-    * be re-queried (checkpoints truncate lineage by design) — re-derive
-    * by calling this again. [[releaseResults]] drops all live results.
     *
     * Size dispatch (r17 optimization, guide §1.2): the iterative loop
     * pays ~4 distributed jobs per round regardless of data size — on the
@@ -95,7 +90,7 @@ object Clusters {
     if (nEdges <= localEdgeBound) {
       import spark.implicits._
       val es = edges.as[(Long, Long)].collect()
-      releaseCheckpoint(edges)
+      Checkpoints.release(edges)
       // Union-find, larger root parented under the smaller — roots are
       // component minima by construction (the ClustersSpec reference
       // model, now the engine's small-graph path).
@@ -148,20 +143,14 @@ object Clusters {
         .select(col("id"), least(col("lbl"), col("lbl2")).as("lbl"))
         .localCheckpoint(false) // materialized by the checksum action
       val newSum = checksum(jumped)
-      releaseCheckpoint(labels) // previous round's blocks
+      Checkpoints.release(labels) // previous round's blocks
       labels = jumped
       converged = newSum == sum
       sum = newSum
       it += 1
     }
-    releaseCheckpoint(edges)
-    val result = labels.select(col("id"), col("lbl").as("cluster"))
-    liveResults.synchronized {
-      liveResults.addLast(labels)
-      if (liveResults.size > MaxLiveResults)
-        releaseCheckpoint(liveResults.removeFirst())
-    }
-    result
+    Checkpoints.release(edges)
+    labels.select(col("id"), col("lbl").as("cluster"))
   }
 
   /** Corpus with every near-dup cluster collapsed to its component-minimum
@@ -180,23 +169,10 @@ object Clusters {
     * FRAMED, but the collect lands as boxed (Long, Long) tuples plus the
     * union-find's HashMap boxing — budget ~150–200 MB of TRANSIENT
     * driver heap per call at the bound (VERDICT r17 #4; released when
-    * the call returns, and MaxLiveResults caps concurrent label
-    * tables). Safe under the default driver heap; raising the bound
-    * must price the boxed form, not the framed 16 B/edge. Above it the
-    * distributed pointer-jump loop runs unchanged. */
+    * the call returns). Safe under the default driver heap; raising the
+    * bound must price the boxed form, not the framed 16 B/edge. Above it
+    * the distributed pointer-jump loop runs unchanged. */
   private[graft] val LocalEdgeBound = 2L * 1000 * 1000
-
-  /** Bound on concurrently-live result label tables (each pair-set-sized,
-    * checkpoint-backed). */
-  private val MaxLiveResults = 8
-  private val liveResults = new java.util.ArrayDeque[DataFrame]()
-
-  /** Release every live result's checkpoint storage. */
-  def releaseResults(): Unit = liveResults.synchronized {
-    while (!liveResults.isEmpty) releaseCheckpoint(liveResults.removeFirst())
-  }
-
-  private def releaseCheckpoint(df: DataFrame): Unit = Checkpoints.release(df)
 
   /** Decimal label sum — the fixpoint witness (monotone decreasing). */
   private def checksum(labels: DataFrame): java.math.BigDecimal =

@@ -226,7 +226,6 @@ object IvfPq {
       .localCheckpoint(false)
     codes.count(); packed.count() // materialize so q can release now
     Checkpoints.release(q)
-    pool(codes); pool(packed)
     PqModel(books, codes, packed)
   }
 
@@ -257,8 +256,6 @@ object IvfPq {
     val cLit = typedlit(coarse.centroids.map(_.toSeq))
     val qq = KMeansLloyd.quantize(queries, idCol, vecCol)
       .localCheckpoint(false)
-    pool(qq) // bounded release — repeat bench runs must not accumulate
-             // one query-frame checkpoint per invocation (self-review r10)
     val pdists = transform(sequence(lit(0), lit(coarse.centroids.length - 1)),
       j => struct(
         aggregate(zip_with(col("q"), element_at(cLit, j + 1),
@@ -280,7 +277,6 @@ object IvfPq {
              (a, b) => a - b)
          else col("q")).as("rq"))
       .localCheckpoint(false)
-    pool(probesR)
     val candidates = lists
       .join(probesR.select(col("query_id"), col("cluster")), "cluster")
       .select(col("query_id"), col("neighbor_id"), col("cluster"))
@@ -396,21 +392,5 @@ object IvfPq {
     Seq("WITH " + qf, ca, cc, rq).mkString(",\n") +
       blocks.mkString("\nSELECT vec_id, block, code, dist_q FROM (\n",
         "\nUNION ALL\n", "\n) ORDER BY vec_id, block")
-  }
-
-  // bounded live-result pool, the KMeansLloyd discipline: repeat-run
-  // benches must not accumulate one checkpoint per invocation
-  private val MaxLiveResults = 8
-  private val liveResults = new java.util.ArrayDeque[DataFrame]()
-  private def pool(df: DataFrame): Unit = liveResults.synchronized {
-    liveResults.addLast(df)
-    if (liveResults.size > MaxLiveResults)
-      Checkpoints.release(liveResults.removeFirst())
-  }
-
-  /** Release every live result's checkpoint storage. */
-  def releaseResults(): Unit = liveResults.synchronized {
-    while (!liveResults.isEmpty)
-      Checkpoints.release(liveResults.removeFirst())
   }
 }

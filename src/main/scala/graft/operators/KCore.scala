@@ -19,19 +19,15 @@ import org.apache.spark.sql.functions._
   *
   * Scale shape: the Clusters/PageRank loop discipline — per-round
   * lazy `localCheckpoint` (constant-size plans, one job materializes
-  * the whole chain), intermediate blocks released, result served from
-  * a bounded pool. Everything is key-partitioned on vertex ids;
-  * nothing collects. */
+  * the whole chain), intermediate blocks released; the result's blocks
+  * live as long as the caller holds it ([[Checkpoints]]). Everything is
+  * key-partitioned on vertex ids; nothing collects. */
 object KCore {
 
   /** Canonical-edge count at or under which the peel runs on the
     * driver — the Clusters/PageRank bound class: 32 MB framed,
     * ~150–200 MB transient driver heap boxed (VERDICT r17 #4). */
   private[graft] val LocalEdgeBound = 2L * 1000 * 1000
-
-  private val MaxLiveResults = 4
-  private val liveResults =
-    new java.util.ArrayDeque[DataFrame]()
 
   /** Surviving (id, degree) after `rounds` peels at threshold `k` —
     * degree is the RESIDUAL degree inside the survivor subgraph.
@@ -97,11 +93,6 @@ object KCore {
       .select(col("v").as("id"), col("d")).localCheckpoint(false)
     result.count() // ONE job materializes the whole lazy chain
     chain.foreach(Checkpoints.release)
-    liveResults.synchronized {
-      liveResults.addLast(result)
-      if (liveResults.size > MaxLiveResults)
-        Checkpoints.release(liveResults.removeFirst())
-    }
     result
   }
 

@@ -105,8 +105,8 @@ object KMeansLloyd {
     * checkpoint, so PlanAuditSpec can assert the narrow-projection
     * claim on the real plan (a checkpointed frame always plans as a
     * bare RDD scan, which would make the pin vacuous — review-caught
-    * r9). The input checkpoint stays alive (pooled) since the
-    * returned frame still reads it. */
+    * r9). The input checkpoint stays alive as long as the returned
+    * frame, which still reads it. */
   private[graft] def fitUncheckpointed(df: DataFrame, idCol: String,
       vecCol: String, k: Int, rounds: Int): DataFrame =
     // bound 0 forces the distributed loop: this hook exists so
@@ -219,33 +219,12 @@ object KMeansLloyd {
       .select(col("vec_id"),
         col("__a.cluster").cast("int").as("cluster"),
         col("__a.dist").as("dist_q"))
-    if (!checkpointOut) {
-      // q must outlive the returned lazy frame; pool it for release
-      liveResults.synchronized {
-        liveResults.addLast(q)
-        if (liveResults.size > MaxLiveResults)
-          Checkpoints.release(liveResults.removeFirst())
-      }
-      return (assigned, cents)
-    }
+    // the lazy frame still reads q, so q is not released here
+    if (!checkpointOut) return (assigned, cents)
     val out = assigned.localCheckpoint(false)
     out.count() // materialize so q's blocks can release now
     Checkpoints.release(q)
-    liveResults.synchronized {
-      liveResults.addLast(out)
-      if (liveResults.size > MaxLiveResults)
-        Checkpoints.release(liveResults.removeFirst())
-    }
     (out, cents)
-  }
-
-  private val MaxLiveResults = 8
-  private val liveResults = new java.util.ArrayDeque[DataFrame]()
-
-  /** Release every live result's checkpoint storage. */
-  def releaseResults(): Unit = liveResults.synchronized {
-    while (!liveResults.isEmpty)
-      Checkpoints.release(liveResults.removeFirst())
   }
 
   /** The unrolled DuckDB replay of [[fit]] over a CTE `q`(vec_id, dim,

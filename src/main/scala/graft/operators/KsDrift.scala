@@ -44,9 +44,6 @@ import org.apache.spark.sql.functions._
   * value) count, which partial-aggregates map-side. */
 object KsDrift {
 
-  private val MaxLiveResults = 4
-  private val liveResults = new java.util.ArrayDeque[DataFrame]()
-
   /** Corpus-wide running sum over the distinct-value table `perVal(v,
     * c_all)` without a global single-partition window: range-partition
     * on v, window per partition id, driver-side offset fold (one row
@@ -125,18 +122,12 @@ object KsDrift {
   }
 
   /** Materialize the distributed build: checkpoint the output, run the
-    * ONE job that computes the lazy chain, release the chain, and track
-    * the live result (bounded pool). */
+    * ONE job that computes the lazy chain, and release the chain. */
   private def materialize(built: (DataFrame, Seq[DataFrame])): DataFrame = {
     val (out, chain) = built
     val result = out.localCheckpoint(false)
     result.count() // ONE job materializes the lazy chain
     chain.foreach(Checkpoints.release)
-    liveResults.synchronized {
-      liveResults.addLast(result)
-      if (liveResults.size > MaxLiveResults)
-        Checkpoints.release(liveResults.removeFirst())
-    }
     result
   }
 

@@ -33,7 +33,7 @@ import org.apache.spark.sql.functions._
   * sorts one task; the struct-max stays map-side combinable). Labels
   * are lazily `localCheckpoint`ed each round (constant-size plans —
   * the Clusters/KCore/PageRank loop discipline), intermediates
-  * released, the result pooled.
+  * released; the result is the caller's ([[Checkpoints]]).
   *
   * Scale shape: everything is key-partitioned on vertex ids; the only
   * shuffled payload is (vertex, label, count) rows — bounded by the
@@ -51,9 +51,6 @@ object LabelProp {
     * driver heap (ADVICE r17) — safe under the default driver heap,
     * released per call; raising the bound must price the boxed form. */
   private[graft] val LocalEdgeBound = 2L * 1000 * 1000
-
-  private val MaxLiveResults = 4
-  private val liveResults = new java.util.ArrayDeque[DataFrame]()
 
   /** (id, community) for every vertex of `edges` after `rounds`
     * synchronous plurality updates; community is the round-`rounds`
@@ -131,11 +128,6 @@ object LabelProp {
       col("lbl").as("community")).localCheckpoint(false)
     result.count() // ONE job materializes the whole lazy chain
     chain.foreach(Checkpoints.release)
-    liveResults.synchronized {
-      liveResults.addLast(result)
-      if (liveResults.size > MaxLiveResults)
-        Checkpoints.release(liveResults.removeFirst())
-    }
     result
   }
 

@@ -53,17 +53,12 @@ object LinkPredict {
     // anti-join) — un-checkpointed, each branch re-runs the upstream
     // bucket expansion + distinct (measured: ~5 re-executions dominated
     // the 10 s sf0.1 cost); lazily checkpointed it computes once.
-    // Released through the bounded LRU pool (the PageRank pattern).
+    // Its blocks live as long as the returned frame ([[Checkpoints]]).
     val e = edges.select(col(aCol).cast("long").as("a"),
         col(bCol).cast("long").as("b"))
       .filter(col("a").isNotNull && col("b").isNotNull && col("a") < col("b"))
       .distinct()
       .localCheckpoint(false)
-    liveEdges.synchronized {
-      liveEdges.addLast(e)
-      if (liveEdges.size > MaxLiveEdges)
-        Checkpoints.release(liveEdges.removeFirst())
-    }
     // both directions: one row per (center z, leaf u); (z, u) is unique
     // because e is distinct and canonical, so each center's leaf count
     // IS its degree — no separate degree aggregation or weight join.
@@ -109,16 +104,5 @@ object LinkPredict {
       .groupBy(col("a"), col("b"))
       .agg(count(lit(1)).as("cn"), sum(col("w_e6")).as("aa_e6"))
       .join(e, Seq("a", "b"), "left_anti")
-  }
-
-  /** Bound on concurrently-live checkpointed edge sets (the
-    * PageRank/Clusters LRU discipline). */
-  private val MaxLiveEdges = 8
-  private val liveEdges = new java.util.ArrayDeque[DataFrame]()
-
-  /** Release every live edge checkpoint. */
-  def releaseEdges(): Unit = liveEdges.synchronized {
-    while (!liveEdges.isEmpty)
-      Checkpoints.release(liveEdges.removeFirst())
   }
 }

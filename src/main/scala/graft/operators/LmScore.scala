@@ -113,12 +113,10 @@ object LmScore {
     val refBg = bigrams(ref, idCol, textCol)
     // the reduced type table feeds FOUR frames (scoring join, context,
     // continuation, T) — checkpoint it or the reference corpus
-    // re-tokenizes once per consumer (the ExactSubstr r9 lesson);
-    // pooled so repeat bench runs release old checkpoints
+    // re-tokenizes once per consumer (the ExactSubstr r9 lesson)
     val c2t = refBg.groupBy(col("w1"), col("w2"))
       .agg(count(lit(1)).as("c2"))
       .localCheckpoint(false)
-    pool(c2t)
     // context table: c1 = Σ c2 (occurrences as left side), n1p = the
     // distinct-continuation count — both off the reduced type table
     val ctx = c2t.groupBy(col("w1"))
@@ -196,7 +194,6 @@ object LmScore {
       .groupBy(col("w1"), col("w2"), col("w3"))
       .agg(count(lit(1)).as("c3"))
       .localCheckpoint(false)
-    pool(c3t)
     val ctx3 = c3t.groupBy(col("w1"), col("w2"))
       .agg(sum(col("c3")).as("c12"), count(lit(1)).as("n1p12"))
     // middle layer: continuation counts ck(w2,w3) = distinct w1, its
@@ -204,7 +201,6 @@ object LmScore {
     val ck23 = c3t.groupBy(col("w2"), col("w3"))
       .agg(count(lit(1)).as("ck"))
       .localCheckpoint(false)
-    pool(ck23)
     val ctx2 = ck23.groupBy(col("w2"))
       .agg(sum(col("ck")).as("cks"), count(lit(1)).as("n1p2"))
     // unigram continuation off the BIGRAM type table (the L93 pc)
@@ -212,7 +208,6 @@ object LmScore {
       .groupBy(col("w1"), col("w2"))
       .agg(count(lit(1)).as("c2"))
       .localCheckpoint(false)
-    pool(c2t)
     val cont = c2t.groupBy(col("w2")).agg(count(lit(1)).as("n1c"))
       .select(col("w2").as("w3"), col("n1c"))
     val types = c2t.agg(count(lit(1)).as("t"))
@@ -276,15 +271,6 @@ object LmScore {
               element_at(col("tk"), i + 1).as("w2"))))).as("bg"))
         .filter(col("bg").isNotNull)
         .select(col("__id"), col("bg.w1").as("w1"), col("bg.w2").as("w2"))
-
-  // bounded live-result pool (the KMeansLloyd/IvfPq discipline)
-  private val MaxLiveResults = 8
-  private val liveResults = new java.util.ArrayDeque[DataFrame]()
-  private def pool(df: DataFrame): Unit = liveResults.synchronized {
-    liveResults.addLast(df)
-    if (liveResults.size > MaxLiveResults)
-      Checkpoints.release(liveResults.removeFirst())
-  }
 
   /** Re-attach per-doc aggregates to EVERY input row (docs without a
     * scoreable n-gram keep 0/0/NULL) and derive the perplexity from the

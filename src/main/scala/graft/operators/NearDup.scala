@@ -55,7 +55,7 @@ object NearDup {
     * subtree, so plan audits (cross-product checks etc.) keep seeing the
     * real pipeline. Because callers routinely wrap and discard the handle
     * (`.orderBy(...)` on top makes `unpersist` unreachable), the module
-    * keeps an LRU of the last [[MaxLiveResults]] result caches and evicts
+    * keeps an LRU of the last [[MaxMaterialized]] result caches and evicts
     * the oldest — a session calling near-dup operators in a loop holds a
     * BOUNDED set of (tiny) pair-set caches instead of leaking one per
     * call; an evicted result that is re-queried recomputes from lineage.
@@ -78,7 +78,7 @@ object NearDup {
       }
       liveResults.synchronized {
         liveResults.addLast(result)
-        if (liveResults.size > MaxLiveResults)
+        if (liveResults.size > MaxMaterialized)
           safeUnpersist(liveResults.removeFirst())
       }
       result
@@ -90,7 +90,7 @@ object NearDup {
     * mapPartitions closures, so entries are plan-DISTINCT (verified: 12
     * identical calls hold exactly 8 entries) — but [[safeUnpersist]] still
     * guards the plan-equal case for future closure-free bodies. */
-  private val MaxLiveResults = 8
+  private val MaxMaterialized = 8
   private val liveResults = new java.util.ArrayDeque[DataFrame]()
 
   /** Unpersist an evicted result unless a newer live entry shares its

@@ -47,11 +47,6 @@ object NegativeSampling {
     val cum = cum0.localCheckpoint(false)
     cum.count() // one job materializes the prefix-sum chain
     chain.foreach(Checkpoints.release)
-    liveCums.synchronized {
-      liveCums.addLast(cum)
-      if (liveCums.size > MaxLiveCums)
-        Checkpoints.release(liveCums.removeFirst())
-    }
     require(tot > 0, "negative sampling over an empty vocabulary")
     val vocab = cum.select(col("v").as("neg_token"),
       (col("cum_all") - col("c_all")).as("lo"),
@@ -70,16 +65,5 @@ object NegativeSampling {
     RangeJoin.pointInInterval(draws, vocab, Seq("__one"),
         "u", "lo", "hi", bucketWidth = math.max(tot / 64, 1L))
       .select(col("anchor"), col("j"), col("neg_token"), col("u"))
-  }
-
-  /** Bound on live vocab-cumulative checkpoints (the PageRank LRU
-    * discipline). */
-  private val MaxLiveCums = 8
-  private val liveCums = new java.util.ArrayDeque[DataFrame]()
-
-  /** Release every live cumulative checkpoint. */
-  def releaseCums(): Unit = liveCums.synchronized {
-    while (!liveCums.isEmpty)
-      Checkpoints.release(liveCums.removeFirst())
   }
 }

@@ -129,11 +129,6 @@ object PageRank {
     rounds.foreach(Checkpoints.release)
     Checkpoints.release(e)
     Checkpoints.release(nodes)
-    liveResults.synchronized {
-      liveResults.addLast(result)
-      if (liveResults.size > MaxLiveResults)
-        Checkpoints.release(liveResults.removeFirst())
-    }
     result
   }
 
@@ -143,15 +138,4 @@ object PageRank {
     * HashMaps — VERDICT r17 #4); the budget class shared with
     * [[Clusters.LocalEdgeBound]], priced at its boxed size. */
   private[graft] val LocalEdgeBound = 2L * 1000 * 1000
-
-  /** Bound on concurrently-live result vectors (each node-table-sized,
-    * checkpoint-backed) — the Clusters LRU pattern. */
-  private val MaxLiveResults = 8
-  private val liveResults = new java.util.ArrayDeque[DataFrame]()
-
-  /** Release every live result's checkpoint storage. */
-  def releaseResults(): Unit = liveResults.synchronized {
-    while (!liveResults.isEmpty)
-      Checkpoints.release(liveResults.removeFirst())
-  }
 }

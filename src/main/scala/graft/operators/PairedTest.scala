@@ -59,17 +59,6 @@ import org.apache.spark.sql.functions._
   * sums and the final panel row are grid aggregations. */
 object PairedTest {
 
-  /** Bound on concurrently-live checkpointed cells tables ([[friedman]])
-    * — the Clusters/PageRank LRU pattern. */
-  private val MaxLiveCells = 4
-  private val liveCells = new java.util.ArrayDeque[DataFrame]()
-
-  /** Release every live cells checkpoint's storage. */
-  def releaseResults(): Unit = liveCells.synchronized {
-    while (!liveCells.isEmpty)
-      Checkpoints.release(liveCells.removeFirst())
-  }
-
   /** Signed-rank over (panelCol, dCol) differences: emits (panelCol,
     * n, n_zero, w2_plus, z2_e6, d_sign, p_e6, sig). */
   def wilcoxonSignedRank(df: DataFrame, panelCol: String,
@@ -154,15 +143,6 @@ object PairedTest {
       .agg(sum(col("__v")).as("__v"))
       .repartition(col(panelCol), col("__b"))
       .localCheckpoint(false)
-    // bounded release pool (the PageRank/Clusters pattern): the
-    // checkpoint's blocks live until the result is materialized;
-    // evicted handles cannot be re-queried (re-derive by calling
-    // friedman again)
-    liveCells.synchronized {
-      liveCells.addLast(cells)
-      if (liveCells.size > MaxLiveCells)
-        Checkpoints.release(liveCells.removeFirst())
-    }
     // panel-wide treatment count k, then complete blocks only
     val kPanel = cells.select(col(panelCol), col("__c")).distinct()
       .groupBy(col(panelCol)).agg(count(lit(1)).as("__k"))

@@ -52,11 +52,6 @@ object QuantileNormalize {
     val pooled = pooled0.localCheckpoint(false)
     pooled.count()
     chain.foreach(Checkpoints.release)
-    liveCums.synchronized {
-      liveCums.addLast(pooled)
-      if (liveCums.size > MaxLiveCums)
-        Checkpoints.release(liveCums.removeFirst())
-    }
     require(n > 0, "quantile normalization over an empty input")
     val targets = pooled.select(col("v").as("target_v"),
       (col("cum_all") - col("c_all") + 1).as("lo"),
@@ -67,14 +62,5 @@ object QuantileNormalize {
     RangeJoin.pointInInterval(indexed, targets, Seq("__one"),
         "idx", "lo", "hi", bucketWidth = math.max(n / 128, 1L))
       .select(col("id"), col("g"), col("v"), col("target_v"))
-  }
-
-  private val MaxLiveCums = 8
-  private val liveCums = new java.util.ArrayDeque[DataFrame]()
-
-  /** Release every live pooled-cumulative checkpoint. */
-  def releaseCums(): Unit = liveCums.synchronized {
-    while (!liveCums.isEmpty)
-      Checkpoints.release(liveCums.removeFirst())
   }
 }

@@ -69,11 +69,9 @@ object Ranking {
     val joined = sorted.join(broadcast(offsets),
       sorted("__rk_pid") === offsets("__rk_pid") &&
         sorted(groupCol) <=> offsets("__rk_g"))
-    // checkpoint + materialize the RESULT, then release the sorted
-    // input immediately (the PageRank pattern): pooling the still-
-    // depended-on input instead would let an eviction strand a lazy
-    // result on missing checkpoint blocks — or worse, recompute it
-    // with freshly-sampled range boundaries (review-caught r9)
+    // checkpoint + materialize the RESULT so the sorted input can be
+    // released now: a lazy result would keep depending on it, and a
+    // recompute would sample fresh range boundaries (review-caught r9)
     val result = joined.select(
       (sorted.columns.filterNot(c => c == "__rk_pid" || c == "__rk_seq")
         .map(sorted(_)) :+
@@ -81,20 +79,6 @@ object Ranking {
       .localCheckpoint(false)
     result.count()
     Checkpoints.release(sorted)
-    liveResults.synchronized {
-      liveResults.addLast(result)
-      if (liveResults.size > MaxLive)
-        Checkpoints.release(liveResults.removeFirst())
-    }
     result
-  }
-
-  private val MaxLive = 8
-  private val liveResults = new java.util.ArrayDeque[DataFrame]()
-
-  /** Release live result checkpoint storage (the PageRank pool). */
-  def releaseAll(): Unit = liveResults.synchronized {
-    while (!liveResults.isEmpty)
-      Checkpoints.release(liveResults.removeFirst())
   }
 }

@@ -548,10 +548,10 @@ object Trend {
     * daily grid — corpus rows collapse once, before level 1. Levels
     * are eagerly `localCheckpoint`ed (grid-sized frames; `depth` ≤ 3
     * extra jobs) so the plan does not grow 3^depth branches;
-    * intermediate levels release their blocks immediately, finals
-    * live in a bounded pool ([[releaseSegments]] — the Clusters
-    * discipline). Output: (group, seg_idx, seg_lo_x, seg_hi_x,
-    * n_days, sum_y, mean_e6 = div(10⁶·sum_y, n_days)). */
+    * intermediate levels release their blocks immediately, the final
+    * level lives as long as the result ([[Checkpoints]]). Output:
+    * (group, seg_idx, seg_lo_x, seg_hi_x, n_days, sum_y,
+    * mean_e6 = div(10⁶·sum_y, n_days)). */
   def changepointSegments(df: DataFrame, groupCol: String, usCol: Column,
       depth: Int = 2, minExplainedPpm: Long = 100000): DataFrame = {
     require(depth >= 1 && depth <= 3, s"depth $depth outside [1, 3]")
@@ -614,11 +614,6 @@ object Trend {
       Checkpoints.release(assign)
       assign = next
     }
-    liveSegments.synchronized {
-      liveSegments.addLast(assign)
-      if (liveSegments.size > MaxLiveSegments)
-        Checkpoints.release(liveSegments.removeFirst())
-    }
     val segs = assign.groupBy(col(groupCol), col("seg"))
       .agg(min(col("x")).as("seg_lo_x"), max(col("x")).as("seg_hi_x"),
         count(lit(1)).as("n_days"), sum(col("y")).as("sum_y"))
@@ -672,16 +667,5 @@ object Trend {
     agg.select(col(groupCol), col("n_days"), col("total"),
       call_function("div",
         (n * q - s * s) * lit(1000000L).cast(d38), n * s).as("vmr_e6"))
-  }
-
-  /** Bound on concurrently-live final segment assignments (each
-    * grid-sized, checkpoint-backed). */
-  private val MaxLiveSegments = 8
-  private val liveSegments = new java.util.ArrayDeque[DataFrame]()
-
-  /** Release every live segmentation's checkpoint storage. */
-  def releaseSegments(): Unit = liveSegments.synchronized {
-    while (!liveSegments.isEmpty)
-      Checkpoints.release(liveSegments.removeFirst())
   }
 }

@@ -69,7 +69,6 @@ class LlmPrepSpec extends SparkSpec {
       .select(col("doc_id")).as[Long].collect().toSet
     assert(perPair == Set(1L, 2L, 9L))
     assert(byCluster == Set(1L, 9L))
-    graft.operators.Clusters.releaseResults()
     NearDup.releaseMaterialized()
   }
 

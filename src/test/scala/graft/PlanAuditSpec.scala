@@ -481,7 +481,6 @@ class PlanAuditSpec extends SparkSpec {
     assert(!plan.contains("Join") && !plan.contains("Window") &&
       !plan.contains("Exchange"),
       s"k-means assignment is not narrow:\n${plan.take(1500)}")
-    graft.operators.KMeansLloyd.releaseResults()
   }
 
   test("interleave positions are a projection over the ranking (no v-sort join)") {

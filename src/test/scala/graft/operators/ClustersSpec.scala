@@ -93,19 +93,20 @@ class ClustersSpec extends SparkSpec {
     assert(Clusters.connectedComponents(empty).count() == 0)
   }
 
-  test("intermediate checkpoints are released; results bounded + releasable") {
+  test("intermediate checkpoints are released; the result is releasable by its owner") {
     val before = spark.sparkContext.getPersistentRDDs.keySet
     val pairs = Seq((1L, 2L), (2L, 3L), (5L, 6L)).toDF("id_a", "id_b")
     // bound 0: the checkpoint-lifecycle contract under test is the
     // distributed loop's (the local path holds no checkpoints at all)
-    Clusters.connectedComponents(pairs, localEdgeBound = 0L).count()
-    // only the live RESULT's checkpoint may remain (intermediate rounds
+    val result = Clusters.connectedComponents(pairs, localEdgeBound = 0L)
+    result.count()
+    // only the held RESULT's checkpoint may remain (intermediate rounds
     // and the edge table are released inside the loop)...
     val during = spark.sparkContext.getPersistentRDDs.keySet -- before
     assert(during.size <= 1, s"unreleased intermediates: $during")
-    // ...and releasing results drops the rest (delta-based: suites share
-    // the JVM-wide session)
-    Clusters.releaseResults()
+    // ...and its owner's release drops the rest (delta-based: suites
+    // share the JVM-wide session)
+    Checkpoints.release(result)
     val leaked = spark.sparkContext.getPersistentRDDs.keySet -- before
     assert(leaked.isEmpty, s"leaked cache ids: $leaked")
   }

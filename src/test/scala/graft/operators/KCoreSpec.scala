@@ -1,5 +1,8 @@
 package graft.operators
 
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.col
+
 import graft.SparkSpec
 
 class KCoreSpec extends SparkSpec {
@@ -70,6 +73,24 @@ class KCoreSpec extends SparkSpec {
         assert(local === dist, s"trial $trial k=$k rounds=$rounds")
       }
     }
+  }
+
+  test("held distributed results outlive later calls and a GC") {
+    // two results stay valid while their caller holds them, however many
+    // calls follow: no operator-side pool may free a result's blocks
+    def cycle(n: Long, off: Long) = spark.range(n).select(
+      (col("id") + off).as("id_a"), ((col("id") + 1) % n + off).as("id_b"))
+    def kcore(n: Long, off: Long) =
+      KCore.vertices(cycle(n, off), "id_a", "id_b", k = 2, rounds = 1,
+        localEdgeBound = 0L)
+    def rows(df: DataFrame) =
+      df.as[(Long, Long)].collect().toSeq.sortBy(_._1)
+    val a = kcore(6, 0)
+    val b = kcore(4, 10)
+    (1 to 5).foreach(i => kcore(3, 100 * i).count()) // old pool held 4
+    System.gc()
+    assert(rows(a) === (0L to 5L).map(v => (v, 2L)))
+    assert(rows(b) === (10L to 13L).map(v => (v, 2L)))
   }
 
   test("long chain needs its rounds: 1 round is NOT the fixpoint, 8 are") {
