@@ -93,7 +93,7 @@ class ClustersSpec extends SparkSpec {
     assert(Clusters.connectedComponents(empty).count() == 0)
   }
 
-  test("intermediate checkpoints are released; the result is releasable by its owner") {
+  test("intermediate checkpoints are released; results bounded + releasable") {
     val before = spark.sparkContext.getPersistentRDDs.keySet
     val pairs = Seq((1L, 2L), (2L, 3L), (5L, 6L)).toDF("id_a", "id_b")
     // bound 0: the checkpoint-lifecycle contract under test is the
