@@ -82,16 +82,14 @@ object BpeLearn {
     * Size dispatch (r18, the PageRank/Clusters discipline): the
     * corpus-sized work — [[vocab]] — always runs distributed; the ROUND
     * LOOP is 12+ iterations of (one shuffle + a 1-row collect + a
-    * checkpoint job) whose inputs never exceed the vocabulary. At or
-    * under `localCellBound` total word chars (= symbol cells; the
-    * NearDup 4M budget class, a few tens of MB boxed) the loop runs on
-    * the driver with the identical pair counts, (cnt, lhs, rhs)-desc
-    * argmax (symbols are [a-z]+, where Java and UTF8 binary order
-    * agree) and leftmost non-overlapping application — BpeLearnSpec
-    * pins local ≡ distributed ≡ the reference trainer. Above the bound
-    * the distributed loop runs unchanged. */
-  def learn(df: DataFrame, textCol: String, nMerges: Int,
-      localCellBound: Long = NearDup.LocalCellBound): Seq[Merge] = {
+    * checkpoint job) whose inputs never exceed the vocabulary. When the
+    * total word chars (= symbol cells) fit [[LocalDispatch.fitsCells]]
+    * the loop runs on the driver with the identical pair counts,
+    * (cnt, lhs, rhs)-desc argmax (symbols are [a-z]+, where Java and
+    * UTF8 binary order agree) and leftmost non-overlapping application
+    * — BpeLearnSpec pins local ≡ distributed ≡ the reference trainer.
+    * Above the bound the distributed loop runs unchanged. */
+  def learn(df: DataFrame, textCol: String, nMerges: Int): Seq[Merge] = {
     require(nMerges >= 1 && nMerges <= 10000,
       s"nMerges must be in [1, 10000], got $nMerges")
     val v = vocab(df, textCol).localCheckpoint(false)
@@ -100,7 +98,7 @@ object BpeLearn {
       val r = v.agg(coalesce(sum(length(col("word"))), lit(0L))).head()
       r.getLong(0)
     }
-    if (cells <= localCellBound) {
+    if (LocalDispatch.fitsCells(cells)) {
       val spark = df.sparkSession
       import spark.implicits._
       val words = v.select(col("word"), col("freq"))

@@ -54,17 +54,16 @@ object Clusters {
     * pays ~4 distributed jobs per round regardless of data size — on the
     * sf0.1 pair sets (hundreds of edges) that fixed scheduling cost IS
     * the operator's wall time (measured 1.4–2.7 s per call inside
-    * q_e15/q_d5). An edge table at or under `localEdgeBound` directed
-    * rows (default [[LocalEdgeBound]] = 32 MB collected) is therefore
-    * solved by a driver-side union-find — the same bounded-collect class
-    * as the engine's grid/page collects, with the bound explicit — and
-    * larger graphs take the distributed loop unchanged. Both paths emit
-    * the identical (id, component-minimum) mapping; ClustersSpec pins
-    * local ≡ distributed on random graphs and forces the distributed
-    * path (bound 0) for the pointer-jump convergence proof. */
+    * q_e15/q_d5). An edge table whose directed rows fit
+    * [[LocalDispatch.fitsEdges]] is therefore solved by a driver-side
+    * union-find — the same bounded-collect class as the engine's
+    * grid/page collects — and larger graphs take the distributed loop
+    * unchanged. Both paths emit the identical (id, component-minimum)
+    * mapping; ClustersSpec pins local ≡ distributed on random graphs
+    * and forces the distributed path ([[LocalDispatch.distributedOnly]])
+    * for the pointer-jump convergence proof. */
   def connectedComponents(pairs: DataFrame, aCol: String = "id_a",
-      bCol: String = "id_b", maxIter: Int = 50,
-      localEdgeBound: Long = LocalEdgeBound): DataFrame = {
+      bCol: String = "id_b", maxIter: Int = 50): DataFrame = {
     val spark = pairs.sparkSession
     // null ids dropped up front (ADVICE r17): the local path's typed
     // collect would NPE on a null where the distributed path emitted a
@@ -87,7 +86,7 @@ object Clusters {
     // One count materializes the checkpoint (the first round's
     // aggregation paid this anyway) and sizes the dispatch.
     val nEdges = edges.count()
-    if (nEdges <= localEdgeBound) {
+    if (LocalDispatch.fitsEdges(nEdges)) {
       import spark.implicits._
       val es = edges.as[(Long, Long)].collect()
       Checkpoints.release(edges)
@@ -163,16 +162,6 @@ object Clusters {
       .select(col("id").as(idCol))
     docs.join(losers, Seq(idCol), "left_anti")
   }
-
-  /** Directed-edge count at or under which the component computation
-    * collects to the driver (union-find): 2M (src, dst) longs = 32 MB
-    * FRAMED, but the collect lands as boxed (Long, Long) tuples plus the
-    * union-find's HashMap boxing — budget ~150–200 MB of TRANSIENT
-    * driver heap per call at the bound (VERDICT r17 #4; released when
-    * the call returns). Safe under the default driver heap; raising the
-    * bound must price the boxed form, not the framed 16 B/edge. Above it
-    * the distributed pointer-jump loop runs unchanged. */
-  private[graft] val LocalEdgeBound = 2L * 1000 * 1000
 
   /** Decimal label sum — the fixpoint witness (monotone decreasing). */
   private def checksum(labels: DataFrame): java.math.BigDecimal =

@@ -179,8 +179,7 @@ object CorpusDiff {
     * 1-(1-j^r)^b, ≥ 1-5e-8 at j=0.8 with the r=4/b=32 defaults. */
   def rekeyed(oldSnap: DataFrame, newSnap: DataFrame, idCol: String,
       contentCol: String, shingleLen: Int = 3, threshold: Double = 0.8,
-      numHashes: Int = 128, bands: Int = 32,
-      localCellBound: Long = NearDup.LocalCellBound): DataFrame = {
+      numHashes: Int = 128, bands: Int = 32): DataFrame = {
     val oldIds = oldSnap.select(col(idCol))
     val newIds = newSnap.select(col(idCol))
     val removed = oldSnap.join(newIds, Seq(idCol), "left_anti")
@@ -191,7 +190,7 @@ object CorpusDiff {
       val sh = cache(NearDup.hashedShingles(
         removed.unionAll(added), idCol, contentCol, shingleLen))
       val cells = NearDup.shCells(sh) // fills the cache, sizes the dispatch
-      if (cells <= localCellBound) {
+      if (LocalDispatch.fitsCells(cells)) {
         // r18 driver kernel (the NearDup size-dispatch class): same
         // banding candidates, same cross-side prune, same confirm —
         // plus one slim collect of the removed-side ids for the side

@@ -73,10 +73,8 @@ object IvfPq {
     * (block, cluster, dim)-keyed aggregation over the corpus instead
     * of m scans. */
   def fitPq(df: DataFrame, idCol: String, vecCol: String, m: Int,
-      ksub: Int, rounds: Int,
-      localCellBound: Long = KMeansLloyd.LocalCellBound): PqModel =
-    fitPqQuantized(KMeansLloyd.quantize(df, idCol, vecCol), m, ksub, rounds,
-      localCellBound)
+      ksub: Int, rounds: Int): PqModel =
+    fitPqQuantized(KMeansLloyd.quantize(df, idCol, vecCol), m, ksub, rounds)
 
   /** PQ over coarse RESIDUALS (the paper's IVFADC form): codebooks fit
     * on `x − coarse_centroid(x)` — residuals concentrate near the
@@ -89,8 +87,7 @@ object IvfPq {
     * per-block recurrences). */
   def fitPqResidual(df: DataFrame, idCol: String, vecCol: String,
       coarse: KMeansLloyd.Model, m: Int, ksub: Int,
-      rounds: Int,
-      localCellBound: Long = KMeansLloyd.LocalCellBound): PqModel = {
+      rounds: Int): PqModel = {
     val cLit = typedlit(coarse.centroids.map(_.toSeq))
     val rq = KMeansLloyd.quantize(df, idCol, vecCol)
       .join(coarse.assign.select(col("vec_id").as("id"), col("cluster")),
@@ -98,14 +95,13 @@ object IvfPq {
       .select(col("id"),
         zip_with(col("q"), element_at(cLit, col("cluster") + 1),
           (a, b) => a - b).as("q"))
-    fitPqQuantized(rq, m, ksub, rounds, localCellBound)
+    fitPqQuantized(rq, m, ksub, rounds)
   }
 
   /** The fused all-blocks trainer over an already-quantized (id, q)
     * frame — the body shared by [[fitPq]] and [[fitPqResidual]]. */
   private def fitPqQuantized(qdf: DataFrame, m: Int, ksub: Int,
-      rounds: Int,
-      localCellBound: Long = KMeansLloyd.LocalCellBound): PqModel = {
+      rounds: Int): PqModel = {
     require(m >= 1 && m <= 64, s"m must be in [1, 64], got $m")
     require(ksub >= 1 && ksub <= 256, s"ksub must be in [1, 256], got $ksub")
     require(rounds >= 0 && rounds <= 100,
@@ -124,14 +120,15 @@ object IvfPq {
       (0 until m).map(j => seeds.map(
         _.getSeq[Long](1).slice(j * sub, (j + 1) * sub).toArray).toIndexedSeq)
 
-    // Size dispatch (r17, the KMeansLloyd discipline): at or under the
-    // cell bound the identical per-block integer recurrence runs on the
-    // driver — same seeds, same (dist, code) tie-break, same
-    // floor-division means and empty-cluster rule — so books, codes and
-    // packed agree digit for digit (IvfPqSpec pins local ≡ distributed;
-    // the generated oracle gates q_v10/q_v11 at 3 SFs).
+    // Size dispatch (r17, the KMeansLloyd discipline): when the cells
+    // fit `LocalDispatch.fitsCells` the identical per-block integer
+    // recurrence runs on the driver — same seeds, same (dist, code)
+    // tie-break, same floor-division means and empty-cluster rule — so
+    // books, codes and packed agree digit for digit (IvfPqSpec pins
+    // local ≡ distributed; the generated oracle gates q_v10/q_v11 at
+    // 3 SFs).
     val nRows = q.count() // cheap: blocks cached by the seeds collect
-    if (nRows * dim <= localCellBound) {
+    if (LocalDispatch.fitsCells(nRows * dim)) {
       val spark = qdf.sparkSession
       import spark.implicits._
       val rows = q.as[(Long, Array[Long])].collect()

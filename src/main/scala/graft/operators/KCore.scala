@@ -24,17 +24,12 @@ import org.apache.spark.sql.functions._
   * key-partitioned on vertex ids; nothing collects. */
 object KCore {
 
-  /** Canonical-edge count at or under which the peel runs on the
-    * driver — the Clusters/PageRank bound class: 32 MB framed,
-    * ~150–200 MB transient driver heap boxed (VERDICT r17 #4). */
-  private[graft] val LocalEdgeBound = 2L * 1000 * 1000
-
   /** Surviving (id, degree) after `rounds` peels at threshold `k` —
     * degree is the RESIDUAL degree inside the survivor subgraph.
     * Self-loops/duplicate/reversed edges collapse first (the census
     * family's hygiene); vertices peeled to isolation disappear. */
   def vertices(edges: DataFrame, aCol: String, bCol: String, k: Int,
-      rounds: Int = 8, localEdgeBound: Long = LocalEdgeBound): DataFrame = {
+      rounds: Int = 8): DataFrame = {
     require(k >= 1, s"k $k must be >= 1")
     require(rounds >= 1, s"rounds $rounds must be >= 1")
     var e = edges
@@ -47,13 +42,13 @@ object KCore {
 
     // Size dispatch (r17, the Clusters/PageRank discipline): `rounds`
     // peels are 3 shuffles each even in the single materializing job —
-    // pure fixed cost on gate-scale graphs. At or under
-    // `localEdgeBound` canonical edges the identical peel sequence runs
-    // on the driver (degree count → keep d ≥ k → filter edges), which
+    // pure fixed cost on gate-scale graphs. When the canonical edges fit
+    // `LocalDispatch.fitsEdges` the identical peel sequence runs on the
+    // driver (degree count → keep d ≥ k → filter edges), which
     // is exact by construction; KCoreSpec pins local ≡ distributed and
     // the unrolled oracle gates both.
     val nEdges = e.count() // materializes the checkpoint; sizes dispatch
-    if (nEdges <= localEdgeBound) {
+    if (LocalDispatch.fitsEdges(nEdges)) {
       val spark = edges.sparkSession
       import spark.implicits._
       var es = e.as[(Long, Long)].collect()

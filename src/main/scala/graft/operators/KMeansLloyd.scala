@@ -73,19 +73,9 @@ object KMeansLloyd {
     * Precondition (the CorpusDiff discipline — documented, not paid
     * for with an O(corpus) shuffle): `idCol` is unique; duplicate ids
     * would double-weight their vector in every centroid mean. */
-  /** Quantized-cell count (rows × dim longs) at or under which the
-    * Lloyd recurrence runs on the driver: 4M cells ≈ 32 MB collected —
-    * the Clusters/PageRank bounded-collect class. The distributed loop
-    * pays seeds + ragged + one collect per round + the output
-    * materialization as separate jobs; on gate-scale corpora that
-    * fixed job cost dominates (measured: coarse fit 0.86 s warm at
-    * sf0.1 for a ~4k × 64 corpus). */
-  private[graft] val LocalCellBound = 4L * 1000 * 1000
-
   def fit(df: DataFrame, idCol: String, vecCol: String, k: Int,
-      rounds: Int, localCellBound: Long = LocalCellBound): DataFrame =
-    run(df, idCol, vecCol, k, rounds, checkpointOut = true,
-      localCellBound = localCellBound)._1
+      rounds: Int): DataFrame =
+    run(df, idCol, vecCol, k, rounds, checkpointOut = true)._1
 
   /** Fitted model: the assignment table of [[fit]] PLUS the final
     * quantized-integer centroids (k × dim longs, grid-sized) — what a
@@ -95,9 +85,9 @@ object KMeansLloyd {
       centroids: IndexedSeq[Array[Long]])
 
   def fitModel(df: DataFrame, idCol: String, vecCol: String, k: Int,
-      rounds: Int, localCellBound: Long = LocalCellBound): Model = {
+      rounds: Int): Model = {
     val (assign, cents) = run(df, idCol, vecCol, k, rounds,
-      checkpointOut = true, localCellBound = localCellBound)
+      checkpointOut = true)
     Model(assign, cents)
   }
 
@@ -109,11 +99,11 @@ object KMeansLloyd {
     * frame, which still reads it. */
   private[graft] def fitUncheckpointed(df: DataFrame, idCol: String,
       vecCol: String, k: Int, rounds: Int): DataFrame =
-    // bound 0 forces the distributed loop: this hook exists so
-    // PlanAuditSpec can pin the narrow-projection plan shape, which a
-    // driver-built result could not show
-    run(df, idCol, vecCol, k, rounds, checkpointOut = false,
-      localCellBound = 0L)._1
+    // forced onto the distributed loop: this hook exists so PlanAuditSpec
+    // can pin the narrow-projection plan shape, which a driver-built
+    // result could not show
+    LocalDispatch.distributedOnly(
+      run(df, idCol, vecCol, k, rounds, checkpointOut = false)._1)
 
   /** Driver-side replica of one argmin: exact integer squared-L2 over
     * the current centroids, ties to the smaller index — the `nearest`
@@ -134,8 +124,7 @@ object KMeansLloyd {
   }
 
   private def run(df: DataFrame, idCol: String, vecCol: String, k: Int,
-      rounds: Int, checkpointOut: Boolean,
-      localCellBound: Long = LocalCellBound)
+      rounds: Int, checkpointOut: Boolean)
       : (DataFrame, IndexedSeq[Array[Long]]) = {
     require(k >= 1 && k <= 1024, s"k must be in [1, 1024], got $k")
     require(rounds >= 0 && rounds <= 100,
@@ -147,15 +136,18 @@ object KMeansLloyd {
     var cents: IndexedSeq[Array[Long]] =
       seeds.map(_.getSeq[Long](1).toArray).toIndexedSeq
 
-    // Size dispatch (r17, the Clusters/PageRank discipline): at or
-    // under `localCellBound` quantized cells the identical integer
-    // recurrence runs on the driver — same seeds, same argmin
-    // tie-break, same floor-division means, same empty-cluster rule —
-    // so the assignment table and centroids agree digit for digit
-    // (KMeansLloydSpec pins local ≡ distributed; the generated oracle
-    // gates both at 3 SFs).
+    // Size dispatch (r17, the Clusters/PageRank discipline): the
+    // distributed loop pays seeds + ragged + one collect per round + the
+    // output materialization as separate jobs, fixed cost that dominates
+    // on gate-scale corpora (measured: coarse fit 0.86 s warm at sf0.1
+    // for a ~4k × 64 corpus). When the quantized cells (rows × dim) fit
+    // `LocalDispatch.fitsCells` the identical integer recurrence runs on
+    // the driver — same seeds, same argmin tie-break, same
+    // floor-division means, same empty-cluster rule — so the assignment
+    // table and centroids agree digit for digit (KMeansLloydSpec pins
+    // local ≡ distributed; the generated oracle gates both at 3 SFs).
     val nRows = q.count() // cheap: blocks cached by the seeds collect
-    if (nRows * dim <= localCellBound) {
+    if (LocalDispatch.fitsCells(nRows * dim)) {
       val spark = df.sparkSession
       import spark.implicits._
       val rows = q.as[(Long, Array[Long])].collect()

@@ -98,23 +98,22 @@ object KsDrift {
     * (g, v, c_s) table; every later stage (corpus CDF, per-group
     * windows, joins) is fixed cost over that table. For a string group
     * column, the pair table is aggregated once (persisted) and counted;
-    * at or under `localPairBound` distinct pairs the identical
-    * jump-point arithmetic runs as a driver kernel ([[localPerGroup]]),
-    * above it the distributed cascade runs from the same shared pair
-    * table (deriving perVal from it — one corpus scan instead of the
-    * pre-r18 two). Non-string group columns keep the classic path. */
+    * when the distinct pairs fit [[LocalDispatch.fitsPairs]] the
+    * identical jump-point arithmetic runs as a driver kernel
+    * ([[localPerGroup]]), above it the distributed cascade runs from
+    * the same shared pair table (deriving perVal from it — one corpus
+    * scan instead of the pre-r18 two). Non-string group columns keep
+    * the classic path. */
   def perGroup(df: DataFrame, groupCol: String, valueCol: String,
-      cdfPartitions: Int = 32,
-      localPairBound: Long = LocalPairBound): DataFrame = {
+      cdfPartitions: Int = 32): DataFrame = {
     val d = normalized(df, groupCol, valueCol)
-    if (localPairBound > 0 && d.schema("g").dataType ==
-        org.apache.spark.sql.types.StringType) {
+    if (d.schema("g").dataType == org.apache.spark.sql.types.StringType) {
       val pairs = d.groupBy(col("g"), col("v"))
         .agg(count(lit(1)).as("c_s")).persist()
       try {
         // fills the cache both branches read; sizes the dispatch
         val nPairs = pairs.count()
-        if (nPairs <= localPairBound) localPerGroup(pairs)
+        if (LocalDispatch.fitsPairs(nPairs)) localPerGroup(pairs)
         else materialize(buildFromPairs(pairs, cdfPartitions))
       } finally pairs.unpersist(blocking = false)
     } else materialize(
@@ -144,9 +143,7 @@ object KsDrift {
     * t0 before the first jump), same `ks_num.toDouble / (n1·n2).toDouble`
     * IEEE division and lone-group guard — local ≡ distributed digit for
     * digit (KsDriftSpec runs every test on both paths). Collected rows
-    * are bounded by [[LocalPairBound]]; boxed heap at the bound is
-    * ~200–300 MB transient (2M (String, Long, Long) tuples), released
-    * with the call. */
+    * are bounded by [[LocalDispatch.fitsPairs]]. */
   private def localPerGroup(pairs: DataFrame): DataFrame = {
     val spark = pairs.sparkSession
     import spark.implicits._
@@ -192,14 +189,6 @@ object KsDrift {
     }.toSeq
     out.toDF("g", "n1", "n2", "ks_num", "ks")
   }
-
-  /** Distinct (group, value) pair count at or under which the KS
-    * arithmetic runs on the driver. Priced at boxed JVM heap (the r18
-    * repricing discipline): 2M collected (String, Long, Long) tuples are
-    * ~200–300 MB transient, and the kernel's work is two linear passes
-    * plus one sort — well under a second. Above the bound the
-    * distributed cascade runs from the same shared pair table. */
-  private[graft] val LocalPairBound = 2L * 1000 * 1000
 
   /** The full lazy plan plus its live checkpoint chain — exposed so
     * PlanAuditSpec can pin the PRE-checkpoint shape (the

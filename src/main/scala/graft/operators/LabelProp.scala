@@ -44,21 +44,13 @@ import org.apache.spark.sql.functions._
   * surface). */
 object LabelProp {
 
-  /** Canonical-edge count at or under which the recurrence runs on the
-    * driver — the Clusters/PageRank bound class: 32 MB framed, but the
-    * boxed collect plus the HashMap[Long, ArrayList[Long]] adjacency
-    * (~4M boxed entries at the bound) is ~200–300 MB of TRANSIENT
-    * driver heap (ADVICE r17) — safe under the default driver heap,
-    * released per call; raising the bound must price the boxed form. */
-  private[graft] val LocalEdgeBound = 2L * 1000 * 1000
-
   /** (id, community) for every vertex of `edges` after `rounds`
     * synchronous plurality updates; community is the round-`rounds`
     * label (the smallest id wins ties at every step, so label values
     * are always some vertex id of the graph). Self-loops, duplicate
     * and reversed edges collapse first; null endpoints drop. */
   def communities(edges: DataFrame, aCol: String, bCol: String,
-      rounds: Int = 4, localEdgeBound: Long = LocalEdgeBound): DataFrame = {
+      rounds: Int = 4): DataFrame = {
     require(rounds >= 1, s"rounds $rounds must be >= 1")
     val und = edges
       .select(least(col(aCol), col(bCol)).cast("long").as("a"),
@@ -68,14 +60,14 @@ object LabelProp {
       .distinct()
       .localCheckpoint(false)
 
-    // Size dispatch (r17, the Clusters/PageRank/KCore discipline): at
-    // or under `localEdgeBound` canonical edges the identical
+    // Size dispatch (r17, the Clusters/PageRank/KCore discipline): when
+    // the canonical edges fit `LocalDispatch.fitsEdges` the identical
     // synchronous plurality recurrence runs on the driver — counts per
     // (vertex, neighbor label), max count, ties to the SMALLEST label,
     // exactly the roundUpdate semantics (LabelPropSpec pins local ≡
     // distributed; the unrolled oracle gates both).
     val nEdges = und.count() // materializes the checkpoint
-    if (nEdges <= localEdgeBound) {
+    if (LocalDispatch.fitsEdges(nEdges)) {
       val spark = edges.sparkSession
       import spark.implicits._
       val es = und.as[(Long, Long)].collect()

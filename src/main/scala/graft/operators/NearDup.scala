@@ -284,12 +284,11 @@ object NearDup {
     * 1-(1-j^r)^b; at the defaults (r=4, b=32) j=0.7 → 0.9998, j=0.9 → ~1. */
   def minhashPairs(df: DataFrame, idCol: String, textCol: String,
       shingleLen: Int = 3, threshold: Double = 0.5,
-      numHashes: Int = 128, bands: Int = 32,
-      localCellBound: Long = LocalCellBound): DataFrame =
+      numHashes: Int = 128, bands: Int = 32): DataFrame =
     materialized { cache =>
       val sh = cache(hashedShingles(df, idCol, textCol, shingleLen))
       val cells = shCells(sh) // fills the shared cache AND sizes the dispatch
-      if (cells <= localCellBound) {
+      if (LocalDispatch.fitsCells(cells)) {
         val sets = collectSets(sh)
         val cand = localMinhashCandidates(sets, numHashes, bands,
           maxBucketSize = 10000)
@@ -416,12 +415,11 @@ object NearDup {
 
   def simhashPairs(df: DataFrame, idCol: String, textCol: String,
       shingleLen: Int = 3, maxHamming: Int = 7, chunks: Int = 8,
-      threshold: Double = 0.5, maxBucketSize: Int = 10000,
-      localCellBound: Long = LocalCellBound): DataFrame =
+      threshold: Double = 0.5, maxBucketSize: Int = 10000): DataFrame =
     materialized { cache =>
       val sh = cache(hashedShingles(df, idCol, textCol, shingleLen))
       val cells = shCells(sh) // fills the shared cache AND sizes the dispatch
-      if (cells <= localCellBound) {
+      if (LocalDispatch.fitsCells(cells)) {
         val sets = collectSets(sh)
         val cand = localSimhashCandidates(sets, maxHamming, chunks,
           maxBucketSize)
@@ -443,12 +441,11 @@ object NearDup {
   def ensemblePairs(df: DataFrame, idCol: String, textCol: String,
       shingleLen: Int = 3, threshold: Double = 0.5,
       numHashes: Int = 128, bands: Int = 32,
-      maxHamming: Int = 7, chunks: Int = 8,
-      localCellBound: Long = LocalCellBound): DataFrame =
+      maxHamming: Int = 7, chunks: Int = 8): DataFrame =
     materialized { cache =>
       val sh = cache(hashedShingles(df, idCol, textCol, shingleLen))
       val cells = shCells(sh) // fills the shared cache AND sizes the dispatch
-      if (cells <= localCellBound) {
+      if (LocalDispatch.fitsCells(cells)) {
         val sets = collectSets(sh)
         val cand = localMinhashCandidates(sets, numHashes, bands,
           maxBucketSize = 10000)
@@ -465,19 +462,16 @@ object NearDup {
 
   // ------------------------------------------- r18 driver kernels
 
-  /** Total shingle cells (Σ|hs|) at or under which the sketch pipelines
-    * run on the driver (guide §1.2 — the KMeansLloyd/Clusters/SetSimJoin
-    * size-dispatch class): signature computation is narrow, but the
-    * banding groupBy, the pair expansion's repartition + distinct and
-    * the melt-join confirm are 5+ shuffle stages of pure fixed cost on
-    * gate-scale corpora (2–3.4 s per call at sf0.1, measured), while the
-    * same arithmetic over the collected sets is a few hundred ms. 4M
-    * cells = 32 MB framed, ~200–400 MB transient boxed driver heap at
-    * the bound (the boxed-price rule). Over the bound the distributed
-    * pipelines run unchanged; the per-doc signature kernels are SHARED
-    * functions and the band keys are computed with Spark's own XXH64, so
-    * local ≡ distributed bit for bit (spec-pinned). */
-  private[graft] val LocalCellBound = 4L * 1000 * 1000
+  // When the total shingle cells (Σ|hs|) fit `LocalDispatch.fitsCells`
+  // the sketch pipelines run on the driver (guide §1.2): signature
+  // computation is narrow, but the banding groupBy, the pair expansion's
+  // repartition + distinct and the melt-join confirm are 5+ shuffle
+  // stages of pure fixed cost on gate-scale corpora (2–3.4 s per call at
+  // sf0.1, measured), while the same arithmetic over the collected sets
+  // is a few hundred ms. Over the bound the distributed pipelines run
+  // unchanged; the per-doc signature kernels are SHARED functions and
+  // the band keys are computed with Spark's own XXH64, so local ≡
+  // distributed bit for bit (spec-pinned).
 
   /** Σ|hs| over a (cached) hashed-shingle frame — ONE job that also
     * fills the cache (null hs counts 0, like the exploded forms). */

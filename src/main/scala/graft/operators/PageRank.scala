@@ -37,8 +37,7 @@ object PageRank {
     * edge list after exactly `iterations` quantized steps from the
     * uniform start 10⁹ DIV N. */
   def ranks(edges: DataFrame, srcCol: String, dstCol: String,
-      iterations: Int = 5, dampE3: Long = 850L,
-      localEdgeBound: Long = LocalEdgeBound): DataFrame = {
+      iterations: Int = 5, dampE3: Long = 850L): DataFrame = {
     require(iterations >= 1 && iterations <= 100,
       s"iterations must be in [1, 100], got $iterations")
     require(dampE3 >= 0L && dampE3 <= 1000L,
@@ -53,13 +52,13 @@ object PageRank {
     // Size dispatch (r17 optimization, the Clusters discipline): the
     // distributed loop is 3 shuffles per iteration — measured 4.2 s of
     // q_g1's 5.0 s at sf0.1 for a 16k-node graph, pure per-stage fixed
-    // cost. At or under `localEdgeBound` directed edges (32 MB
-    // collected) the identical quantized-integer recurrence runs on the
-    // driver: every step is floor division / integer sums, so the two
-    // paths agree on every digit (PageRankSpec pins local ≡ distributed
-    // and the unrolled oracle gates both at 3 SFs).
+    // cost. When the directed edges fit `LocalDispatch.fitsEdges` the
+    // identical quantized-integer recurrence runs on the driver: every
+    // step is floor division / integer sums, so the two paths agree on
+    // every digit (PageRankSpec pins local ≡ distributed and the
+    // unrolled oracle gates both at 3 SFs).
     val nEdges = e.count() // materializes the checkpoint; sizes dispatch
-    if (nEdges <= localEdgeBound) {
+    if (LocalDispatch.fitsEdges(nEdges)) {
       val spark = edges.sparkSession
       import spark.implicits._
       val es = e.as[(Long, Long)].collect()
@@ -131,11 +130,4 @@ object PageRank {
     Checkpoints.release(nodes)
     result
   }
-
-  /** Directed-edge count at or under which the recurrence runs on the
-    * driver: 2M (src, dst) longs = 32 MB framed, ~150–200 MB of
-    * transient driver heap once boxed (tuples + the per-iteration
-    * HashMaps — VERDICT r17 #4); the budget class shared with
-    * [[Clusters.LocalEdgeBound]], priced at its boxed size. */
-  private[graft] val LocalEdgeBound = 2L * 1000 * 1000
 }

@@ -53,22 +53,18 @@ import org.apache.spark.sql.functions._
   * generalization the LLM-data extension ships alongside L2/L44. */
 object SetSimJoin {
 
-  /** Total shingle cells (Σ|hs| over the frame(s)) at or under which the
-    * whole prefix-filter join runs on the driver (r18, guide §1.2 — the
-    * KMeansLloyd/Clusters size-dispatch discipline): the distributed
-    * cascade is ~6 shuffle stages (doc frequency, rarity prefixes, the
-    * token-bucket pair expansion, two size probes, the melt-join
-    * confirm) whose per-stage fixed cost dominates on gate-scale corpora
-    * (measured: 2.4–3.7 s per call at sf0.1 for a 5,000-doc / 1.5M-cell
-    * corpus), while the kernel is a few hundred ms of hash-map work over
-    * the SAME hashed shingle sets. 4M cells = 32 MB framed; collected as
-    * (Long, Array[Long]) rows plus the kernel's token maps it is
-    * ~200–400 MB of TRANSIENT driver heap at the bound (the boxed-price
-    * rule, VERDICT r17 #4) — released when the call returns. Above the
-    * bound the distributed cascade runs unchanged; both paths replicate
-    * the identical integer prefix/size arithmetic and the identical
-    * rounding, pinned local ≡ distributed in SetSimJoinSpec. */
-  private[graft] val LocalCellBound = 4L * 1000 * 1000
+  // Size dispatch (r18, guide §1.2 — the KMeansLloyd/Clusters
+  // discipline): when the total shingle cells (Σ|hs| over the frame(s))
+  // fit `LocalDispatch.fitsCells` the whole prefix-filter join runs on
+  // the driver. The distributed cascade is ~6 shuffle stages (doc
+  // frequency, rarity prefixes, the token-bucket pair expansion, two size
+  // probes, the melt-join confirm) whose per-stage fixed cost dominates
+  // on gate-scale corpora (measured: 2.4–3.7 s per call at sf0.1 for a
+  // 5,000-doc / 1.5M-cell corpus), while the kernel is a few hundred ms
+  // of hash-map work over the SAME hashed shingle sets. Above the bound
+  // the distributed cascade runs unchanged; both paths replicate the
+  // identical integer prefix/size arithmetic and the identical rounding,
+  // pinned local ≡ distributed in SetSimJoinSpec.
 
   /** (id_a, id_b, jaccard) for every unordered pair with exact distinct
     * `shingleLen`-gram Jaccard ≥ `threshold`, id_a < id_b, jaccard
@@ -81,8 +77,7 @@ object SetSimJoin {
     * never pair: their Jaccard is 0 by the family's convention. */
   def pairs(df: DataFrame, idCol: String, textCol: String,
       shingleLen: Int = 3, threshold: Double = 0.8,
-      maxTokenGroup: Int = Int.MaxValue,
-      localCellBound: Long = LocalCellBound): DataFrame = {
+      maxTokenGroup: Int = Int.MaxValue): DataFrame = {
     require(threshold > 0.0 && threshold <= 1.0,
       s"threshold $threshold outside (0, 1] — at 0 the prefix is the " +
         "whole set and the join is all-pairs by definition")
@@ -93,7 +88,7 @@ object SetSimJoin {
       val sh = cache(NearDup.hashedShingles(df, idCol, textCol, shingleLen))
       // one agg fills the shared cache AND sizes the dispatch
       val cells = NearDup.shCells(sh)
-      if (cells <= localCellBound) {
+      if (LocalDispatch.fitsCells(cells)) {
         val sets = NearDup.collectSets(sh)
         localPairsDF(df.sparkSession,
           localJaccardPairs(sets, t6, threshold, maxTokenGroup), "jaccard")
@@ -333,10 +328,9 @@ object SetSimJoin {
     * collapsed — out-of-contract inputs no longer degrade gracefully. */
   def containmentPairs(df: DataFrame, idCol: String, textCol: String,
       shingleLen: Int = 3, threshold: Double = 0.8,
-      maxTokenGroup: Int = Int.MaxValue,
-      localCellBound: Long = LocalCellBound): DataFrame =
+      maxTokenGroup: Int = Int.MaxValue): DataFrame =
     containmentJoinImpl(df, df, idCol, textCol, shingleLen, threshold,
-      maxTokenGroup, same = true, localCellBound)
+      maxTokenGroup, same = true)
 
   /** The two-frame form of [[containmentPairs]] (r12): directed pairs
     * (id_a ∈ probe, id_b ∈ index) with C(A→B) ≥ threshold — the
@@ -363,10 +357,9 @@ object SetSimJoin {
     * slice (unlike the self-join's quadratic oracle). */
   def containmentJoin(probe: DataFrame, index: DataFrame, idCol: String,
       textCol: String, shingleLen: Int = 3, threshold: Double = 0.8,
-      maxTokenGroup: Int = Int.MaxValue,
-      localCellBound: Long = LocalCellBound): DataFrame =
+      maxTokenGroup: Int = Int.MaxValue): DataFrame =
     containmentJoinImpl(probe, index, idCol, textCol, shingleLen,
-      threshold, maxTokenGroup, same = false, localCellBound)
+      threshold, maxTokenGroup, same = false)
 
   /** Shared body. `same = true` is the self-join fast path (r17
     * optimization, guide §1.2 "don't compute things you throw away"):
@@ -381,8 +374,7 @@ object SetSimJoin {
     * ids, and shP ∪ shI dedup-by-id = shP). */
   private def containmentJoinImpl(probe: DataFrame, index: DataFrame,
       idCol: String, textCol: String, shingleLen: Int,
-      threshold: Double, maxTokenGroup: Int, same: Boolean,
-      localCellBound: Long = LocalCellBound): DataFrame = {
+      threshold: Double, maxTokenGroup: Int, same: Boolean): DataFrame = {
     require(threshold > 0.0 && threshold <= 1.0,
       s"threshold $threshold outside (0, 1] — at 0 every pair qualifies")
     val t6 = math.round(threshold * 1e6)
@@ -395,7 +387,7 @@ object SetSimJoin {
       // the Σ|hs| aggs fill both caches AND size the dispatch
       val cells = NearDup.shCells(shP) +
         (if (same) 0L else NearDup.shCells(shI))
-      if (cells <= localCellBound) {
+      if (LocalDispatch.fitsCells(cells)) {
         val pSets = NearDup.collectSets(shP)
         val iSets = if (same) pSets else NearDup.collectSets(shI)
         localPairsDF(probe.sparkSession,

@@ -29,10 +29,11 @@ import org.apache.spark.sql.functions._
   * at √(2m) per vertex by construction. All joins are key-partitioned
   * on vertex ids; the one-row aggregates combine via 1×1 cross joins;
   * nothing corpus-sized is collected or broadcast (the degree table —
-  * |V| slim rows — rides AQE's broadcast decision). At or under
-  * [[LocalEdgeBound]] edges the identical arithmetic runs as a driver
-  * kernel instead (r18 — the multi-join cascade is pure per-stage fixed
-  * cost at that size); the distributed shape above is the >bound path.
+  * |V| slim rows — rides AQE's broadcast decision). When the edges fit
+  * [[LocalDispatch.fitsTriangleEdges]] the identical arithmetic runs as
+  * a driver kernel instead (r18 — the multi-join cascade is pure
+  * per-stage fixed cost at that size); the distributed shape above is
+  * the >bound path.
   *
   * Exactness: counts are counts; the clustering coefficient is emitted
   * as `gcc_e6` = ⌊3·triangles·10⁶ / wedges⌋ in integral arithmetic —
@@ -45,8 +46,7 @@ object Triangles {
     * is a SET of unordered pairs). `n_wedges` = Σ_v C(deg v, 2) — the
     * gcc denominator (closed + open length-2 paths); `gcc_e6` = 0 on a
     * wedgeless graph. Ids follow the graph family's bigint contract. */
-  def stats(edges: DataFrame, aCol: String, bCol: String,
-      localEdgeBound: Long = LocalEdgeBound): DataFrame =
+  def stats(edges: DataFrame, aCol: String, bCol: String): DataFrame =
     NearDup.materialized { cache =>
       val e0 = cache(edges
         .select(least(col(aCol), col(bCol)).cast("long").as("a"),
@@ -57,7 +57,7 @@ object Triangles {
       // fill the shared cache before branches race on it; sizes the
       // size dispatch (r18, the PageRank/Clusters discipline)
       val nEdges = e0.count()
-      if (nEdges <= localEdgeBound) localStats(e0)
+      if (LocalDispatch.fitsTriangleEdges(nEdges)) localStats(e0)
       else {
         val deg = cache(
           e0.select(col("a").as("v")).unionAll(e0.select(col("b").as("v")))
@@ -179,7 +179,7 @@ object Triangles {
     * (n_edges, assortativity6); null correlation (zero variance — e.g.
     * a regular graph) surfaces as null, honestly. */
   def degreeAssortativity(edges: DataFrame, aCol: String,
-      bCol: String, localEdgeBound: Long = LocalEdgeBound): DataFrame =
+      bCol: String): DataFrame =
     NearDup.materialized { cache =>
       val e0 = cache(edges
         .select(least(col(aCol), col(bCol)).cast("long").as("a"),
@@ -189,7 +189,7 @@ object Triangles {
         .distinct())
       // fills the shared cache; sizes the size dispatch (r18)
       val nEdges = e0.count()
-      if (nEdges <= localEdgeBound) localAssortativity(e0)
+      if (LocalDispatch.fitsTriangleEdges(nEdges)) localAssortativity(e0)
       else {
         val deg = e0.select(col("a").as("v")).unionAll(e0.select(col("b").as("v")))
           .groupBy(col("v")).agg(count(lit(1)).as("d"))
@@ -251,14 +251,4 @@ object Triangles {
       else None
     Seq((es.length.toLong, r6)).toDF("n_edges", "assortativity6")
   }
-
-  /** Undirected-edge count at or under which the census runs on the
-    * driver (r18, the Clusters/PageRank dispatch discipline). Priced for
-    * the WORST term, the triangle closure: candidate wedges are bounded
-    * by m·√(2m) — ~1.3·10⁸ hash probes (boxed pair allocs) at 200k edges,
-    * well under a second of driver time — and the boxed collect is
-    * ~10–20 MB transient heap. Above the bound the distributed cascade
-    * runs unchanged (its orientation caps the same wedge volume across
-    * executors). */
-  private[graft] val LocalEdgeBound = 200L * 1000
 }

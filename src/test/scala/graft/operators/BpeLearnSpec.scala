@@ -42,13 +42,13 @@ class BpeLearnSpec extends SparkSpec {
     out.toSeq
   }
 
-  // both r18 dispatch paths: the default bound routes these corpora to
-  // the driver kernel, bound -1 forces the distributed round loop — the
-  // two must agree merge for merge
+  // both r18 dispatch paths: the normal dispatch routes these corpora to
+  // the driver kernel, distributedOnly forces the distributed round loop
+  // — the two must agree merge for merge
   private def run(texts: Seq[String], n: Int) = {
     val df = texts.zipWithIndex.map(_.swap).toDF("id", "text")
     val local = BpeLearn.learn(df, "text", n).map(m => (m.lhs, m.rhs, m.cnt))
-    val dist = BpeLearn.learn(df, "text", n, localCellBound = -1L)
+    val dist = LocalDispatch.distributedOnly(BpeLearn.learn(df, "text", n))
       .map(m => (m.lhs, m.rhs, m.cnt))
     assert(local === dist, "local kernel ≡ distributed round loop")
     local

@@ -41,13 +41,13 @@ class ClustersSpec extends SparkSpec {
   test("200-node chain converges via pointer jumping (O(log n) rounds)") {
     // Diameter 199 >> maxIter 50: neighbor propagation alone CANNOT
     // finish — only the lbl <- lbl(lbl) doubling step makes this converge,
-    // so this test fails if the jump is ever dropped. localEdgeBound = 0
+    // so this test fails if the jump is ever dropped. distributedOnly
     // forces the DISTRIBUTED path (the r17 size dispatch would otherwise
     // solve this tiny graph on the driver and the jump would go untested).
     val chain = (0L until 199L).map(i => (i, i + 1))
-    val got = Clusters.connectedComponents(chain.toDF("id_a", "id_b"),
-        localEdgeBound = 0L)
-      .as[(Long, Long)].collect()
+    val got = LocalDispatch.distributedOnly(
+      Clusters.connectedComponents(chain.toDF("id_a", "id_b"))
+        .as[(Long, Long)].collect())
     assert(got.length == 200)
     assert(got.forall(_._2 == 0L))
   }
@@ -62,8 +62,8 @@ class ClustersSpec extends SparkSpec {
       val df = edges.toDF("id_a", "id_b")
       val local = Clusters.connectedComponents(df)
         .as[(Long, Long)].collect().toMap
-      val dist = Clusters.connectedComponents(df, localEdgeBound = 0L)
-        .as[(Long, Long)].collect().toMap
+      val dist = LocalDispatch.distributedOnly(
+        Clusters.connectedComponents(df).as[(Long, Long)].collect().toMap)
       assert(local == dist, s"trial $trial")
       assert(local == ufComponents(edges), s"trial $trial vs reference")
     }
@@ -96,9 +96,10 @@ class ClustersSpec extends SparkSpec {
   test("intermediate checkpoints are released; results bounded + releasable") {
     val before = spark.sparkContext.getPersistentRDDs.keySet
     val pairs = Seq((1L, 2L), (2L, 3L), (5L, 6L)).toDF("id_a", "id_b")
-    // bound 0: the checkpoint-lifecycle contract under test is the
-    // distributed loop's (the local path holds no checkpoints at all)
-    val result = Clusters.connectedComponents(pairs, localEdgeBound = 0L)
+    // distributedOnly: the checkpoint-lifecycle contract under test is
+    // the distributed loop's (the local path holds no checkpoints at all)
+    val result =
+      LocalDispatch.distributedOnly(Clusters.connectedComponents(pairs))
     result.count()
     // only the held RESULT's checkpoint may remain (intermediate rounds
     // and the edge table are released inside the loop)...

@@ -165,16 +165,17 @@ class CorpusDiffSpec extends SparkSpec {
       (10L, "the relocated document text which is long enough to match v2"),
       (11L, "a genuinely new document unrelated to anything seen before"))
       .toDF("doc_id", "text")
-    // both dispatch paths (r18 size dispatch: bound 0 forces the
+    // both dispatch paths (r18 size dispatch: distributedOnly forces the
     // distributed cascade) must agree with the expectation
-    for (bound <- Seq(NearDup.LocalCellBound, 0L)) {
-      val got = CorpusDiff.rekeyed(oldSnap, newSnap, "doc_id", "text",
-          localCellBound = bound)
-        .as[(Long, Long, Double)].collect().toSeq
+    for (distributed <- Seq(false, true)) {
+      val got = onPath(distributed)(CorpusDiff.rekeyed(oldSnap, newSnap,
+          "doc_id", "text")
+        .as[(Long, Long, Double)].collect().toSeq)
       // exactly the (2 -> 10) move; docs 3/4 are IDENTICAL same-side
       // removals — they certainly share bands, so only the cross-side
       // candidate prune keeps them out
-      assert(got.map(p => (p._1, p._2)) === Seq((2L, 10L)), s"bound=$bound")
+      assert(got.map(p => (p._1, p._2)) === Seq((2L, 10L)),
+        s"distributed=$distributed")
       assert(got.head._3 >= 0.8)
     }
   }
@@ -189,11 +190,11 @@ class CorpusDiffSpec extends SparkSpec {
     val newSnap = Seq(
       (5L, "the migrating document body long enough to band and match"))
       .toDF("doc_id", "text")
-    for (bound <- Seq(NearDup.LocalCellBound, 0L)) {
-      val got = CorpusDiff.rekeyed(oldSnap, newSnap, "doc_id", "text",
-          localCellBound = bound)
-        .as[(Long, Long, Double)].collect().toSeq
-      assert(got === Seq((20L, 5L, 1.0)), s"bound=$bound")
+    for (distributed <- Seq(false, true)) {
+      val got = onPath(distributed)(CorpusDiff.rekeyed(oldSnap, newSnap,
+          "doc_id", "text")
+        .as[(Long, Long, Double)].collect().toSeq)
+      assert(got === Seq((20L, 5L, 1.0)), s"distributed=$distributed")
     }
   }
 

@@ -39,8 +39,8 @@ class IvfPqSpec extends SparkSpec {
   test("local driver path ≡ distributed trainer (r17 size dispatch)") {
     val m = 4; val ksub = 8; val rounds = 2
     val local = IvfPq.fitPq(emb, "vec_id", "embedding", m, ksub, rounds)
-    val dist = IvfPq.fitPq(emb, "vec_id", "embedding", m, ksub, rounds,
-      localCellBound = 0L)
+    val dist = LocalDispatch.distributedOnly(
+      IvfPq.fitPq(emb, "vec_id", "embedding", m, ksub, rounds))
     assert(local.books.map(_.map(_.toSeq)) ===
       dist.books.map(_.map(_.toSeq)))
     val lc = local.codes.orderBy(col("vec_id"), col("block"))

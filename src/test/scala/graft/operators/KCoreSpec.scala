@@ -67,9 +67,9 @@ class KCoreSpec extends SparkSpec {
         val df = edges.toDF("id_a", "id_b")
         val local = KCore.vertices(df, "id_a", "id_b", k, rounds)
           .as[(Long, Long)].collect().toSeq.sortBy(_._1)
-        val dist = KCore.vertices(df, "id_a", "id_b", k, rounds,
-            localEdgeBound = 0L)
-          .as[(Long, Long)].collect().toSeq.sortBy(_._1)
+        val dist = LocalDispatch.distributedOnly(
+          KCore.vertices(df, "id_a", "id_b", k, rounds)
+            .as[(Long, Long)].collect().toSeq.sortBy(_._1))
         assert(local === dist, s"trial $trial k=$k rounds=$rounds")
       }
     }
@@ -80,9 +80,8 @@ class KCoreSpec extends SparkSpec {
     // calls follow: no operator-side pool may free a result's blocks
     def cycle(n: Long, off: Long) = spark.range(n).select(
       (col("id") + off).as("id_a"), ((col("id") + 1) % n + off).as("id_b"))
-    def kcore(n: Long, off: Long) =
-      KCore.vertices(cycle(n, off), "id_a", "id_b", k = 2, rounds = 1,
-        localEdgeBound = 0L)
+    def kcore(n: Long, off: Long) = LocalDispatch.distributedOnly(
+      KCore.vertices(cycle(n, off), "id_a", "id_b", k = 2, rounds = 1))
     def rows(df: DataFrame) =
       df.as[(Long, Long)].collect().toSeq.sortBy(_._1)
     val a = kcore(6, 0)

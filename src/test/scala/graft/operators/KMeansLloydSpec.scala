@@ -106,13 +106,13 @@ class KMeansLloydSpec extends SparkSpec {
     for ((k, rounds) <- Seq((3, 2), (5, 3))) {
       val local = KMeansLloyd.fit(df, "vec_id", "embedding", k, rounds)
         .orderBy(col("vec_id")).as[(Long, Int, Long)].collect().toSeq
-      val dist = KMeansLloyd.fit(df, "vec_id", "embedding", k, rounds,
-          localCellBound = 0L)
-        .orderBy(col("vec_id")).as[(Long, Int, Long)].collect().toSeq
+      val dist = LocalDispatch.distributedOnly(
+        KMeansLloyd.fit(df, "vec_id", "embedding", k, rounds)
+          .orderBy(col("vec_id")).as[(Long, Int, Long)].collect().toSeq)
       assert(local === dist, s"k=$k rounds=$rounds")
       val ml = KMeansLloyd.fitModel(df, "vec_id", "embedding", k, rounds)
-      val md = KMeansLloyd.fitModel(df, "vec_id", "embedding", k, rounds,
-        localCellBound = 0L)
+      val md = LocalDispatch.distributedOnly(
+        KMeansLloyd.fitModel(df, "vec_id", "embedding", k, rounds))
       assert(ml.centroids.map(_.toSeq) === md.centroids.map(_.toSeq),
         s"centroids k=$k rounds=$rounds")
     }

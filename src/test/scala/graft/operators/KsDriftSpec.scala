@@ -24,15 +24,15 @@ class KsDriftSpec extends SparkSpec {
     }.toSeq.sortBy(_._1)
   }
 
-  // every assertion runs BOTH dispatch paths (r18): the driver kernel
-  // (default bound) and the distributed cascade (bound 0), pinned equal
+  // every assertion runs BOTH dispatch paths (r18), pinned equal: the
+  // driver kernel (normal dispatch) and, under distributedOnly, the
+  // distributed cascade over the persisted pair table
   private def run(rows: Seq[(String, Long)], parts: Int = 32) = {
-    val local = KsDrift.perGroup(rows.toDF("source", "v"), "source", "v",
+    def ks() = KsDrift.perGroup(rows.toDF("source", "v"), "source", "v",
         parts)
       .as[(String, Long, Long, Long, Double)].collect().toSeq.sortBy(_._1)
-    val dist = KsDrift.perGroup(rows.toDF("source", "v"), "source", "v",
-        parts, localPairBound = 0L)
-      .as[(String, Long, Long, Long, Double)].collect().toSeq.sortBy(_._1)
+    val local = ks()
+    val dist = LocalDispatch.distributedOnly(ks())
     assert(local === dist, s"local/distributed KS paths diverged (parts=$parts)")
     local
   }
@@ -115,12 +115,11 @@ class KsDriftSpec extends SparkSpec {
     val df = Seq[(String, java.lang.Long)](
       ("a", 1L), ("a", 2L), (null, 3L), ("b", null), ("b", 5L))
       .toDF("source", "v")
-    for (bound <- Seq(KsDrift.LocalPairBound, 0L)) {
-      val got = KsDrift.perGroup(df, "source", "v",
-          localPairBound = bound)
-        .as[(String, Long, Long, Long, Double)].collect().toSeq.sortBy(_._1)
+    for (distributed <- Seq(false, true)) {
+      val got = onPath(distributed)(KsDrift.perGroup(df, "source", "v")
+        .as[(String, Long, Long, Long, Double)].collect().toSeq.sortBy(_._1))
       assert(got === reference(Seq("a" -> 1L, "a" -> 2L, "b" -> 5L)),
-        s"bound=$bound")
+        s"distributed=$distributed")
     }
   }
 }

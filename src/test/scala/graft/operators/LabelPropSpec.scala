@@ -81,9 +81,9 @@ class LabelPropSpec extends SparkSpec {
         val df = edges.toDF("id_a", "id_b")
         val local = LabelProp.communities(df, "id_a", "id_b", r)
           .as[(Long, Long)].collect().toSeq.sortBy(_._1)
-        val dist = LabelProp.communities(df, "id_a", "id_b", r,
-            localEdgeBound = 0L)
-          .as[(Long, Long)].collect().toSeq.sortBy(_._1)
+        val dist = LocalDispatch.distributedOnly(
+          LabelProp.communities(df, "id_a", "id_b", r)
+            .as[(Long, Long)].collect().toSeq.sortBy(_._1))
         assert(local === dist, s"trial $trial rounds=$r")
         assert(local === reference(edges, r), s"trial $trial vs reference")
       }

@@ -64,17 +64,17 @@ class PageRankSpec extends SparkSpec {
   }
 
   test("partitioning-invariant (exact integers shuffle-order-proof)") {
-    // localEdgeBound = 0 pins the DISTRIBUTED loop — the property under
+    // distributedOnly pins the DISTRIBUTED loop — the property under
     // test is shuffle-order-proofness, which the driver path can't show
     val edges = Seq(
       (1L, 2L), (2L, 3L), (3L, 1L), (3L, 4L), (4L, 2L), (5L, 3L))
     val df = edges.toDF("src", "dst")
-    val a = PageRank.ranks(df.repartition(1), "src", "dst", 4,
-        localEdgeBound = 0L)
-      .as[(Long, Long)].collect().toMap
-    val b = PageRank.ranks(df.repartition(17, col("dst")), "src", "dst", 4,
-        localEdgeBound = 0L)
-      .as[(Long, Long)].collect().toMap
+    val (a, b) = LocalDispatch.distributedOnly {
+      (PageRank.ranks(df.repartition(1), "src", "dst", 4)
+        .as[(Long, Long)].collect().toMap,
+        PageRank.ranks(df.repartition(17, col("dst")), "src", "dst", 4)
+          .as[(Long, Long)].collect().toMap)
+    }
     assert(a === b)
     assert(a === reference(edges, 4))
   }
@@ -88,8 +88,8 @@ class PageRankSpec extends SparkSpec {
       val df = edges.toDF("src", "dst")
       val local = PageRank.ranks(df, "src", "dst", 4)
         .as[(Long, Long)].collect().toMap
-      val dist = PageRank.ranks(df, "src", "dst", 4, localEdgeBound = 0L)
-        .as[(Long, Long)].collect().toMap
+      val dist = LocalDispatch.distributedOnly(
+        PageRank.ranks(df, "src", "dst", 4).as[(Long, Long)].collect().toMap)
       assert(local === dist, s"trial $trial")
       assert(local === reference(edges, 4), s"trial $trial vs reference")
     }

@@ -33,19 +33,20 @@ class SetSimJoinSpec extends SparkSpec {
     } yield (a, b, j)
   }
 
-  // bound = 0 forces the distributed cascade (the r18 size dispatch's
-  // over-bound path); the default takes the driver kernel on these tiny
-  // corpora — property tests run BOTH so local ≡ distributed stays pinned
-  private val BothPaths = Seq(SetSimJoin.LocalCellBound, 0L)
+  // distributed = true runs under distributedOnly, forcing the
+  // distributed cascade (the r18 size dispatch's over-bound path); the
+  // normal dispatch takes the driver kernel on these tiny corpora —
+  // property tests run BOTH so local ≡ distributed stays pinned
+  private val BothPaths = Seq(false, true)
 
   private def run(docs: Seq[(Long, String)], threshold: Double,
       maxTokenGroup: Int = Int.MaxValue,
-      bound: Long = SetSimJoin.LocalCellBound): Seq[(Long, Long, Double)] =
-    SetSimJoin.pairs(docs.toDF("doc_id", "text"), "doc_id", "text",
-        shingleLen = 3, threshold = threshold, maxTokenGroup = maxTokenGroup,
-        localCellBound = bound)
+      distributed: Boolean = false): Seq[(Long, Long, Double)] =
+    onPath(distributed)(SetSimJoin.pairs(docs.toDF("doc_id", "text"),
+        "doc_id", "text", shingleLen = 3, threshold = threshold,
+        maxTokenGroup = maxTokenGroup)
       .orderBy(col("id_a"), col("id_b"))
-      .as[(Long, Long, Double)].collect().toSeq
+      .as[(Long, Long, Double)].collect().toSeq)
 
   test("hand case: exact dup, near dup above and below threshold") {
     val docs = Seq(
@@ -82,10 +83,11 @@ class SetSimJoinSpec extends SparkSpec {
       } ++ Seq((nDocs + 1).toLong -> "", (nDocs + 2).toLong -> "x y")
       val threshold = Seq(0.3, 0.5, 0.8)(rnd.nextInt(3))
       val want = bruteForce(docs, 3, threshold)
-      for (bound <- BothPaths) {
-        val got = run(docs, threshold, bound = bound)
+      for (distributed <- BothPaths) {
+        val got = run(docs, threshold, distributed = distributed)
         assert(got === want,
-          s"trial $trial threshold=$threshold bound=$bound docs=$docs")
+          s"trial $trial threshold=$threshold distributed=$distributed " +
+            s"docs=$docs")
       }
     }
   }
@@ -102,10 +104,10 @@ class SetSimJoinSpec extends SparkSpec {
       (id + 100) -> t.toSeq
     }
     val docs = (originals ++ mutated).map { case (id, t) => id -> t.mkString(" ") }
-    for (threshold <- Seq(0.4, 0.6, 0.9); bound <- BothPaths) {
-      val got = run(docs, threshold, bound = bound)
+    for (threshold <- Seq(0.4, 0.6, 0.9); distributed <- BothPaths) {
+      val got = run(docs, threshold, distributed = distributed)
       val want = bruteForce(docs, 3, threshold)
-      assert(got === want, s"threshold=$threshold bound=$bound")
+      assert(got === want, s"threshold=$threshold distributed=$distributed")
     }
   }
 
@@ -113,9 +115,10 @@ class SetSimJoinSpec extends SparkSpec {
     // 6 identical docs: every prefix token group has 6 members → a cap of
     // 2 drops the group and with it every pair; uncapped finds all 15
     val docs = (1L to 6L).map(_ -> "a b c d e f g h")
-    for (bound <- BothPaths) {
-      assert(run(docs, 0.9, bound = bound).size === 15)
-      assert(run(docs, 0.9, maxTokenGroup = 2, bound = bound).isEmpty)
+    for (distributed <- BothPaths) {
+      assert(run(docs, 0.9, distributed = distributed).size === 15)
+      assert(run(docs, 0.9, maxTokenGroup = 2,
+        distributed = distributed).isEmpty)
     }
   }
 
@@ -148,12 +151,12 @@ class SetSimJoinSpec extends SparkSpec {
 
   private def runContainment(docs: Seq[(Long, String)], threshold: Double,
       maxTokenGroup: Int = Int.MaxValue,
-      bound: Long = SetSimJoin.LocalCellBound): Seq[(Long, Long, Double)] =
-    SetSimJoin.containmentPairs(docs.toDF("doc_id", "text"), "doc_id",
-        "text", shingleLen = 3, threshold = threshold,
-        maxTokenGroup = maxTokenGroup, localCellBound = bound)
+      distributed: Boolean = false): Seq[(Long, Long, Double)] =
+    onPath(distributed)(SetSimJoin.containmentPairs(
+        docs.toDF("doc_id", "text"), "doc_id", "text", shingleLen = 3,
+        threshold = threshold, maxTokenGroup = maxTokenGroup)
       .orderBy(col("id_a"), col("id_b"))
-      .as[(Long, Long, Double)].collect().toSeq
+      .as[(Long, Long, Double)].collect().toSeq)
 
   test("containment: a quote inside a long doc scores 1.0 one way only " +
       "(the Jaccard gap)") {
@@ -187,10 +190,11 @@ class SetSimJoinSpec extends SparkSpec {
       val docs = base ++ quotes ++ Seq((9000L + trial) -> "")
       val threshold = Seq(0.5, 0.8, 1.0)(rnd.nextInt(3))
       val want = bruteForceContainment(docs, threshold)
-      for (bound <- BothPaths) {
-        val got = runContainment(docs, threshold, bound = bound)
+      for (distributed <- BothPaths) {
+        val got = runContainment(docs, threshold, distributed = distributed)
         assert(got === want,
-          s"trial $trial threshold=$threshold bound=$bound docs=$docs")
+          s"trial $trial threshold=$threshold distributed=$distributed " +
+            s"docs=$docs")
       }
     }
   }
@@ -205,15 +209,16 @@ class SetSimJoinSpec extends SparkSpec {
     }
     val probeIds = docs.map(_._1).filter(_ % 5 == 0).toSet
     val probe = docs.filter(d => probeIds(d._1))
-    for (bound <- BothPaths) {
-      val cross = SetSimJoin.containmentJoin(probe.toDF("doc_id", "text"),
-          docs.toDF("doc_id", "text"), "doc_id", "text", threshold = 0.5,
-          localCellBound = bound)
+    for (distributed <- BothPaths) {
+      val cross = onPath(distributed)(SetSimJoin.containmentJoin(
+          probe.toDF("doc_id", "text"), docs.toDF("doc_id", "text"),
+          "doc_id", "text", threshold = 0.5)
         .orderBy(col("id_a"), col("id_b"))
-        .as[(Long, Long, Double)].collect().toSeq
-      val selfFiltered = runContainment(docs, 0.5, bound = bound)
-        .filter(p => probeIds(p._1))
-      assert(cross === selfFiltered, s"bound=$bound")
+        .as[(Long, Long, Double)].collect().toSeq)
+      val selfFiltered =
+        runContainment(docs, 0.5, distributed = distributed)
+          .filter(p => probeIds(p._1))
+      assert(cross === selfFiltered, s"distributed=$distributed")
       // shared-id self-pairs never appear
       assert(cross.forall(p => p._1 != p._2))
     }
@@ -234,10 +239,10 @@ class SetSimJoinSpec extends SparkSpec {
   test("containment maxTokenGroup caps the INDEX side: capped run loses pairs") {
     val docs = (1L to 6L).map(_ -> "a b c d e f g h")
     // 6 identical docs: 30 directed pairs uncapped, none with cap 2
-    for (bound <- BothPaths) {
-      assert(runContainment(docs, 0.9, bound = bound).size === 30)
+    for (distributed <- BothPaths) {
+      assert(runContainment(docs, 0.9, distributed = distributed).size === 30)
       assert(runContainment(docs, 0.9, maxTokenGroup = 2,
-        bound = bound).isEmpty)
+        distributed = distributed).isEmpty)
     }
   }
 }

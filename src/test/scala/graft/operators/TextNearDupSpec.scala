@@ -188,28 +188,28 @@ class TextNearDupSpec extends SparkSpec {
     // the driver kernels must reproduce the BANDING behavior (not the
     // exhaustive answer — banding recall is probabilistic and the
     // operator contract is the sketch): force the distributed path with
-    // bound 0 and compare bit for bit, at a threshold where banding
-    // misses are possible and with both sketch families
+    // distributedOnly and compare bit for bit, at a threshold where
+    // banding misses are possible and with both sketch families
     val docs = spark.read.parquet(s"$sf0001/documents.parquet")
     def collect(df: org.apache.spark.sql.DataFrame) =
       df.as[(Long, Long, Double)].collect().toSet
     for ((nh, bd) <- Seq((128, 32), (16, 4))) {
       val local = collect(NearDup.minhashPairs(docs, "doc_id", "text", 3,
         0.5, numHashes = nh, bands = bd))
-      val dist = collect(NearDup.minhashPairs(docs, "doc_id", "text", 3,
-        0.5, numHashes = nh, bands = bd, localCellBound = 0L))
+      val dist = LocalDispatch.distributedOnly(collect(NearDup.minhashPairs(
+        docs, "doc_id", "text", 3, 0.5, numHashes = nh, bands = bd)))
       assert(local == dist, s"minhash local≠distributed at k=$nh b=$bd")
     }
     assert(
       collect(NearDup.simhashPairs(docs, "doc_id", "text", 3,
         maxHamming = 7, chunks = 8, threshold = 0.5)) ==
-      collect(NearDup.simhashPairs(docs, "doc_id", "text", 3,
-        maxHamming = 7, chunks = 8, threshold = 0.5, localCellBound = 0L)),
+      LocalDispatch.distributedOnly(collect(NearDup.simhashPairs(docs,
+        "doc_id", "text", 3, maxHamming = 7, chunks = 8, threshold = 0.5))),
       "simhash local≠distributed")
     assert(
       collect(NearDup.ensemblePairs(docs, "doc_id", "text", 3, 0.5)) ==
-      collect(NearDup.ensemblePairs(docs, "doc_id", "text", 3, 0.5,
-        localCellBound = 0L)),
+      LocalDispatch.distributedOnly(collect(
+        NearDup.ensemblePairs(docs, "doc_id", "text", 3, 0.5))),
       "ensemble local≠distributed")
   }
 
@@ -244,12 +244,12 @@ class TextNearDupSpec extends SparkSpec {
     val before = spark.sparkContext.getPersistentRDDs.size
     // distinct plan per call (different limit) so the bound is exercised
     // even if a future Spark dedupes plan-equal persists. Forced onto the
-    // DISTRIBUTED path (bound 0): the r18 driver kernel returns
+    // DISTRIBUTED path (distributedOnly): the r18 driver kernel returns
     // LocalRelations whose persists the CacheManager plan-dedupes — the
     // LRU exists for the over-bound results this exercises.
-    for (i <- 1 to 12)
+    for (i <- 1 to 12) LocalDispatch.distributedOnly(
       NearDup.minhashPairs(base.limit(18 + i), "doc_id", "text",
-        threshold = 0.8, localCellBound = 0L).count()
+        threshold = 0.8).count())
     Thread.sleep(200) // let non-blocking unpersists drain
     val live = spark.sparkContext.getPersistentRDDs.size - before
     assert(live <= 10, // 8 LRU results + in-flight slack

@@ -5,15 +5,15 @@ import graft.SparkSpec
 class TrianglesSpec extends SparkSpec {
   import spark.implicits._
 
-  // every census goes through BOTH paths — the default bound routes these
-  // small fixtures to the r18 driver kernel, bound -1 forces the
-  // distributed cascade — and the two must agree digit for digit
+  // every census goes through BOTH paths — the normal dispatch routes
+  // these small fixtures to the r18 driver kernel, distributedOnly forces
+  // the distributed cascade — and the two must agree digit for digit
   private def stats(edges: Seq[(Long, Long)]) = {
     val df = edges.toDF("a", "b")
     val local = Triangles.stats(df, "a", "b")
       .as[(Long, Long, Long, Long, Long)].head()
-    val dist = Triangles.stats(df, "a", "b", localEdgeBound = -1L)
-      .as[(Long, Long, Long, Long, Long)].head()
+    val dist = LocalDispatch.distributedOnly(Triangles.stats(df, "a", "b")
+      .as[(Long, Long, Long, Long, Long)].head())
     assert(local === dist, "local kernel ≡ distributed cascade")
     local
   }
@@ -76,9 +76,9 @@ class TrianglesSpec extends SparkSpec {
       val df = edges.toDF("a", "b")
       val local = Triangles.degreeAssortativity(df, "a", "b")
         .as[(Long, Option[Double])].head()
-      val dist = Triangles
-        .degreeAssortativity(df, "a", "b", localEdgeBound = -1L)
-        .as[(Long, Option[Double])].head()
+      val dist = LocalDispatch.distributedOnly(Triangles
+        .degreeAssortativity(df, "a", "b")
+        .as[(Long, Option[Double])].head())
       assert(local === dist, "local kernel ≡ distributed cascade")
       local
     }
