@@ -2,8 +2,11 @@ package graft.operators
 
 import java.sql.{Connection, DriverManager, PreparedStatement}
 
-import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{Column, DataFrame, Observation}
+import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.spark.sql.{Column, DataFrame, Encoders, Observation}
+import org.apache.spark.sql.execution.datasources.{FileStatusCache,
+  HadoopFsRelation, InMemoryFileIndex}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{IntegerType, StructField, StructType}
 
@@ -13,7 +16,9 @@ import org.apache.spark.sql.types.{IntegerType, StructField, StructType}
   *
   * Protocol: empty short-circuit (S7) → null-filter (F3) → dedup batch (J1)
   * → anti-join against the sink's existing keys (J2/S5) → append only the
-  * fresh rows (S6).
+  * fresh rows (S6). [[toBucketedParquet]] dedups after the anti-join,
+  * which keeps the same rows: the anti-join drops all of a key's rows or
+  * none.
   *
   * Scale notes:
   *  - The reference probes with a `WHERE id IN (…literal list…)` SQL
@@ -26,10 +31,11 @@ import org.apache.spark.sql.types.{IntegerType, StructField, StructType}
   *    (`__bucket = pmod(xxhash64(key), numBuckets)`), and the probe prunes
   *    to only the partition directories whose bucket appears in the batch —
   *    probe cost is O(sink/numBuckets × touched buckets), independent of
-  *    total sink size for small batches. The probe lists the sink root once
-  *    and then only the touched directories (O(touched dirs), never every
-  *    file of the sink), and reads them with a known schema (the key and
-  *    the bucket), so no job infers a schema from parquet footers.
+  *    total sink size for small batches. The driver lists the sink root
+  *    once and then only the touched directories (O(touched dirs), never
+  *    every file of the sink), and Spark reads them with a known schema
+  *    (the key and the bucket), so no job lists files or infers a schema
+  *    from parquet footers.
   *  - The empty-input short-circuit is never a full `count()` (VERDICT r1
   *    S7 note): a `limit(1)`-backed `isEmpty`, or an empty touched collect.
   *  - The reference's fallback blind append on error
@@ -76,12 +82,15 @@ object IdempotentAppend {
     pmod(xxhash64(cols: _*), lit(numBuckets))
 
   /** The buckets of a batch's non-null keys, as [[toBucketedParquet]]
-    * lays them out — bounded by `numBuckets`, never data-sized. */
+    * lays them out — bounded by `numBuckets`, never data-sized. One job
+    * and no shuffle: each partition sends its own distinct set (at most
+    * partitions × `numBuckets` values), and the driver merges them. */
   private def touchedBuckets(batch: DataFrame, key: String,
       numBuckets: Int): Array[Long] =
     WindowFilters.dropNullKeys(batch, key)
-      .select(bucketExpr(Seq(col(key)), numBuckets)).distinct()
-      .collect().map(_.getLong(0))
+      .select(bucketExpr(Seq(col(key)), numBuckets)).as(Encoders.scalaLong)
+      .mapPartitions(_.toSet.iterator)(Encoders.scalaLong)
+      .collect().distinct
 
   /** The batch's `key` field as a read schema: a probe that names its
     * schema runs no footer-inference job over the sink. */
@@ -90,9 +99,17 @@ object IdempotentAppend {
 
   /** The `key` column of the bucketed dataset at `sinkPath`, read from the
     * `touched` bucket directories only, or None when none of them exists
-    * yet. One listing of the sink root picks the directories; they are
-    * read under `basePath`, so `__bucket` stays a column, with `batch`'s
-    * key and the bucket as a known schema. */
+    * yet. The driver lists the sink root once to pick the directories,
+    * then each touched directory once, serially, keeping the files whose
+    * names start with neither `_` nor `.` (the filter Spark's own listing
+    * applies; a crashed writer's root `_temporary` never matches a bucket).
+    * That listing is handed to Spark through a [[FileStatusCache]], so
+    * Spark's file index finds nothing left to list and starts no listing
+    * job, however many directories the batch touches. One LIST per touched
+    * directory is cheap on a local or HDFS sink; an object-store sink with
+    * thousands of touched buckets pays them one after another. The
+    * directories are read under `basePath`, so `__bucket` stays a column,
+    * with `batch`'s key and the bucket as a known schema. */
   private def probeKeys(batch: DataFrame, key: String, sinkPath: String,
       touched: Array[Long]): Option[DataFrame] = {
     val spark = batch.sparkSession
@@ -100,46 +117,68 @@ object IdempotentAppend {
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val names = touched.map(b => s"$BucketCol=$b").toSet
     val dirs =
-      if (!fs.exists(root)) Array.empty[String]
-      else fs.listStatus(root)
-        .filter(s => s.isDirectory && names(s.getPath.getName))
-        .map(_.getPath.toString)
-    if (dirs.isEmpty) None
-    else Some(spark.read
-      .schema(keySchema(batch, key).add(StructField(BucketCol, IntegerType)))
-      .option("basePath", sinkPath).parquet(dirs.toIndexedSeq: _*)
-      .select(col(key)))
+      if (!fs.exists(root)) Seq.empty[Path]
+      else fs.listStatus(root).toSeq
+        .filter(s => s.isDirectory && names(s.getPath.getName)).map(_.getPath)
+    if (dirs.isEmpty) return None
+    val leaves: Map[Path, Array[FileStatus]] = dirs.map { d =>
+      d -> fs.listStatus(d).filter { f =>
+        val n = f.getPath.getName
+        f.isFile && !n.startsWith("_") && !n.startsWith(".")
+      }
+    }.toMap
+    val listed = new FileStatusCache {
+      override def getLeafFiles(path: Path): Option[Array[FileStatus]] =
+        leaves.get(path)
+      def putLeafFiles(path: Path, files: Array[FileStatus]): Unit = ()
+      def invalidateAll(): Unit = ()
+    }
+    val schema = keySchema(batch, key)
+    val index = new InMemoryFileIndex(spark, dirs, Map("basePath" -> sinkPath),
+      Some(schema.add(StructField(BucketCol, IntegerType))), listed)
+    Some(spark.baseRelationToDataFrame(HadoopFsRelation(index,
+        index.partitionSchema, schema, None, new ParquetFileFormat, Map.empty)(
+        spark)).select(col(key)))
   }
 
   /** Scale-safe variant: the sink is partitioned by a key-hash bucket and
     * the probe reads only the buckets the batch touches. `numBuckets` sizes
     * the pruning granularity: at a 100 TB sink, 1024 buckets ≈ 100 GB
     * probed per touched bucket. The probe lists only the touched bucket
-    * directories and reads them with a known schema (the batch's key and
-    * `__bucket`): no listing of the whole sink, no footer-inference job.
+    * directories, on the driver, and reads them with a known schema (the
+    * batch's key and `__bucket`): no listing of the whole sink, no listing
+    * job, no footer-inference job.
     *
-    * Two actions per batch, as in [[toBucketedStore]]: a collect of the
-    * touched buckets from the RAW null-filtered batch (a safe superset —
-    * dedup only removes rows — that skips the dedup shuffle; empty is the
-    * S7 short-circuit, before anything touches the sink), then ONE write of
-    * the pruned anti-join, its inserted count observed on the write itself,
-    * so nothing is persisted. The write hash-partitions on the bucket into
-    * min(touched, parallelism) tasks — a repartition by number, which AQE
-    * never coalesces: ONE file per touched bucket directory (small files
-    * kill partitioned sinks at scale), the files written in parallel. */
+    * An append into an existing sink runs four jobs:
+    *   1. the touched-bucket collect from the RAW null-filtered batch (a
+    *      safe superset — dedup only removes rows; empty is the S7
+    *      short-circuit, before anything touches the sink);
+    *   2. the broadcast of the pruned probe (none into a new sink);
+    *   3. ONE exchange, a hash-repartition of the anti-joined rows on the
+    *      bucket into min(touched, parallelism) tasks — by number, which
+    *      AQE never coalesces, so each touched bucket directory gets ONE
+    *      file (small files kill partitioned sinks at scale), written in
+    *      parallel;
+    *   4. the write, whose inserted count is observed on the write itself,
+    *      so nothing is persisted.
+    * The in-batch dedup runs after the exchange, on (bucket, key): the
+    * bucket is a function of the key, so it keeps exactly the rows a dedup
+    * on the key keeps, and the bucket partitioning already clusters it. */
   def toBucketedParquet(batch: DataFrame, sinkPath: String, key: String,
       numBuckets: Int = 256): Long = {
     val spark = batch.sparkSession
     val touched = touchedBuckets(batch, key, numBuckets)
     if (touched.isEmpty) return 0L // S7, or all keys null (ADVICE r2)
-    val withBucket = prepare(batch, key)
-      .withColumn(BucketCol, bucketExpr(Seq(col(key)), numBuckets))
+    val rows = WindowFilters.dropNullKeys(batch, key)
     val fresh = probeKeys(batch, key, sinkPath, touched)
-      .fold(withBucket)(withBucket.join(_, Seq(key), "left_anti"))
-    val obs = Observation()
+      .fold(rows)(rows.join(_, Seq(key), "left_anti"))
     val writers = math.min(touched.length, spark.sparkContext.defaultParallelism)
-    fresh.observe(obs, count(lit(1)).as("n"))
+    val bucketed = fresh
+      .withColumn(BucketCol, bucketExpr(Seq(col(key)), numBuckets))
       .repartition(writers, col(BucketCol)) // 1 file per bucket dir
+    val obs = Observation()
+    Dedup.byKey(bucketed, BucketCol, key)
+      .observe(obs, count(lit(1)).as("n"))
       .write.mode("append").partitionBy(BucketCol).parquet(sinkPath)
     // An all-replayed write is collapsed by AQE's empty-relation
     // propagation, which drops the metric: absent reads as 0.
@@ -224,6 +263,9 @@ object IdempotentAppend {
     // the collect skips the dedup shuffle entirely. It also leaves the
     // write as the prepared plans' ONLY consumer, so nothing needs
     // persisting or executing twice.
+    // One job, no shuffle: each partition sends its distinct (sink,
+    // bucket) pairs, and the driver merges them.
+    val pairs = Encoders.tuple(Encoders.STRING, Encoders.scalaLong)
     val touched: Map[String, Array[Long]] =
       if (!anyExists) Map.empty
       else sinks.map { s =>
@@ -232,9 +274,10 @@ object IdempotentAppend {
           WindowFilters.dropNullKeys(s.batch, s.key)
             .select(lit(s.name).as(SinkCol),
               bucketExpr(bucketSrc, numBuckets).as(BucketCol)) }
-        .reduce(_ unionAll _).distinct().collect()
-        .groupBy(_.getString(0))
-        .map { case (n, rs) => n -> rs.map(_.getLong(1)) }
+        .reduce(_ unionAll _).as(pairs)
+        .mapPartitions(_.toSet.iterator)(pairs).collect().distinct
+        .groupBy(_._1)
+        .map { case (n, rs) => n -> rs.map(_._2) }
     val freshSides = prepared.map { case (s, df) =>
       val fresh = probeKeys(s.batch, s.key, sinkPath(storePath, s.name),
           touched.getOrElse(s.name, Array.empty[Long]))

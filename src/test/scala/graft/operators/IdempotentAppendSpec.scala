@@ -69,26 +69,25 @@ class IdempotentAppendSpec extends SparkSpec {
     assert(files == dirs, s"$files files for $dirs partition dirs")
   }
 
-  test("bucketed sink: a small batch's probe runs no listing job and no footer job") {
-    // Spark lists more than 32 directories in a job of its own, and a
-    // parquet read without a schema reads footers in another; both run
-    // outside any query execution. The probe of a batch touching ≤ 32 of
-    // 64 buckets lists only its own directories and names its schema.
-    val sink = tmpDir("bucketed_listing")
-    val base = (1 to 1000).map(i => i -> s"v$i").toDF("id", "v")
-    assert(IdempotentAppend.toBucketedParquet(base, sink, "id", 64) == 1000)
-    val tag = "graft.spec.probe"
-    val listing, inferring = new java.util.concurrent.atomic.AtomicInteger(0)
+  /** One Spark job start: its description, and whether it ran inside a
+    * query execution (a listing or footer-inference job runs outside). */
+  private case class JobStart(desc: String, inQuery: Boolean)
+
+  /** The jobs `body` starts, in order. The listener sees job starts in
+    * order, so once a marker job's start arrives, every start before it
+    * has been recorded. */
+  private def jobsOf(body: => Unit): Seq[JobStart] = {
+    val tag = "graft.spec.jobs"
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[JobStart]()
     val drained = new java.util.concurrent.CountDownLatch(1)
     val listener = new org.apache.spark.scheduler.SparkListener {
       override def onJobStart(
           j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
         Option(j.properties).flatMap(p => Option(p.getProperty(tag))) match {
-          case Some("append") =>
-            val desc = Option(j.properties.getProperty("spark.job.description"))
-            if (desc.exists(_.startsWith("Listing leaf files"))) listing.incrementAndGet()
-            else if (j.properties.getProperty("spark.sql.execution.id") == null)
-              inferring.incrementAndGet()
+          case Some("body") =>
+            seen.add(JobStart(
+              String.valueOf(j.properties.getProperty("spark.job.description")),
+              j.properties.getProperty("spark.sql.execution.id") != null))
           case Some("marker") => drained.countDown()
           case _ =>
         }
@@ -96,11 +95,8 @@ class IdempotentAppendSpec extends SparkSpec {
     val sc = spark.sparkContext
     sc.addSparkListener(listener)
     try {
-      sc.setLocalProperty(tag, "append")
-      assert(IdempotentAppend.toBucketedParquet(batch(5 -> "x", 1001 -> "y"),
-        sink, "id", 64) == 1)
-      // the listener sees job starts in order: once the marker job's
-      // arrives, every start before it has been counted
+      sc.setLocalProperty(tag, "body")
+      body
       sc.setLocalProperty(tag, "marker")
       sc.parallelize(Seq(1), 1).count()
       assert(drained.await(30, java.util.concurrent.TimeUnit.SECONDS))
@@ -108,8 +104,103 @@ class IdempotentAppendSpec extends SparkSpec {
       sc.setLocalProperty(tag, null)
       sc.removeSparkListener(listener)
     }
-    assert(listing.get == 0, s"${listing.get} listing job(s)")
-    assert(inferring.get == 0, s"${inferring.get} schema-inference job(s)")
+    seen.toArray(Array.empty[JobStart]).toSeq
+  }
+
+  private def listingJobs(jobs: Seq[JobStart]): Int =
+    jobs.count(_.desc.startsWith("Listing leaf files"))
+
+  /** A 1000-row sink of ids 1..1000 in 64 buckets. */
+  private def sink1000(prefix: String): String = {
+    val sink = tmpDir(prefix)
+    val base = (1 to 1000).map(i => i -> s"v$i").toDF("id", "v")
+    assert(IdempotentAppend.toBucketedParquet(base, sink, "id", 64) == 1000)
+    sink
+  }
+
+  test("bucketed sink: a small batch's probe runs no listing job and no footer job") {
+    // Spark lists more than 32 directories in a job of its own, and a
+    // parquet read without a schema reads footers in another; both run
+    // outside any query execution. The probe of a batch touching ≤ 32 of
+    // 64 buckets lists only its own directories and names its schema.
+    val sink = sink1000("bucketed_listing")
+    val jobs = jobsOf {
+      assert(IdempotentAppend.toBucketedParquet(batch(5 -> "x", 1001 -> "y"),
+        sink, "id", 64) == 1)
+    }
+    val listing = listingJobs(jobs)
+    val inferring = jobs.count(j => !j.inQuery && !j.desc.startsWith("Listing"))
+    assert(listing == 0, s"$listing listing job(s)")
+    assert(inferring == 0, s"$inferring schema-inference job(s)")
+  }
+
+  test("bucketed sink: a probe of more than 32 bucket directories runs no listing job") {
+    // Above 32 paths Spark's own file listing runs as a job; the probe
+    // hands Spark the driver's listing of the touched directories instead.
+    val sink = sink1000("bucketed_listing_wide")
+    val wide = (901 to 1100).map(i => i -> s"w$i").toDF("id", "v")
+    val touched = wide.select(IdempotentAppend.bucketExpr(Seq(col("id")), 64))
+      .distinct().count()
+    assert(touched > 32, s"the batch touches only $touched buckets")
+    val jobs = jobsOf {
+      assert(IdempotentAppend.toBucketedParquet(wide, sink, "id", 64) == 100)
+    }
+    assert(listingJobs(jobs) == 0,
+      s"${listingJobs(jobs)} listing job(s): ${jobs.map(_.desc).mkString("; ")}")
+  }
+
+  test("bucketed sink: an append into an existing sink runs at most 4 jobs, one file per bucket") {
+    // touched collect, probe broadcast, one exchange, write
+    val sink = sink1000("bucketed_jobs")
+    def files = spark.read.parquet(sink).select(input_file_name()).distinct().count()
+    // 200 keys, half present (901..1000), half fresh (1001..1100), and
+    // in-batch duplicates of both kinds
+    val keys = (901 to 1100).map(i => i -> s"w$i") ++
+      (901 to 920).map(i => i -> s"d$i") ++ (1001 to 1020).map(i => i -> s"d$i")
+    val b = keys.toDF("id", "v")
+    val freshDirs = (1001 to 1100).toDF("id")
+      .select(IdempotentAppend.bucketExpr(Seq(col("id")), 64)).distinct().count()
+    val before = files
+    val jobs = jobsOf {
+      assert(IdempotentAppend.toBucketedParquet(b, sink, "id", 64) == 100)
+    }
+    assert(jobs.size <= 4, s"${jobs.size} jobs: ${jobs.map(_.desc).mkString("; ")}")
+    val after = spark.read.parquet(sink)
+    assert(after.count() == 1100 && after.select("id").distinct().count() == 1100)
+    assert(files - before == freshDirs,
+      s"${files - before} files added for $freshDirs bucket directories")
+    assert(IdempotentAppend.toBucketedParquet(b, sink, "id", 64) == 0)
+    assert(spark.read.parquet(sink).count() == 1100)
+  }
+
+  test("bucketed sink: the probe skips _ and . files and a crashed writer's _temporary") {
+    val sink = tmpDir("bucketed_stray")
+    assert(IdempotentAppend.toBucketedParquet(
+      (1 to 100).map(i => i -> s"v$i").toDF("id", "v"), sink, "id", 8) == 100)
+    val fresh = (101 to 140).map(i => i -> s"v$i").toDF("id", "v")
+    val bucket = fresh.select(IdempotentAppend.bucketExpr(Seq(col("id")), 8))
+      .head().getLong(0)
+    // a parquet file holding every fresh key: were the probe to read it,
+    // the fresh rows would count as present
+    val strayDir = tmpDir("bucketed_stray_src")
+    fresh.select("id").coalesce(1).write.parquet(strayDir)
+    val stray = new java.io.File(strayDir).listFiles()
+      .find(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet")).get
+    def plant(to: java.io.File): Unit = {
+      to.getParentFile.mkdirs()
+      java.nio.file.Files.copy(stray.toPath, to.toPath)
+    }
+    val dir = new java.io.File(sink, s"${IdempotentAppend.BucketCol}=$bucket")
+    assert(dir.isDirectory)
+    plant(new java.io.File(dir, "_tmp"))
+    java.nio.file.Files.write(new java.io.File(dir, ".hidden").toPath,
+      "not parquet".getBytes("UTF-8"))
+    plant(new java.io.File(sink,
+      s"_temporary/0/${IdempotentAppend.BucketCol}=$bucket/part-x.parquet"))
+    val b = fresh.union((91 to 100).map(i => i -> s"r$i").toDF("id", "v"))
+    assert(IdempotentAppend.toBucketedParquet(b, sink, "id", 8) == 40)
+    assert(IdempotentAppend.toBucketedParquet(b, sink, "id", 8) == 0)
+    assert(spark.read.parquet(sink).count() == 140)
   }
 
   test("bucketed sink: disk bucket = bucketExpr; one observed write counts") {
